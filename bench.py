@@ -628,6 +628,7 @@ def _compact_summary(result: dict) -> dict:
             sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:5]
         ),
         "full_results": "BENCH_LOCAL.json",
+        "cpus": result.get("cpus"),
     }
     if "regression_gate" in result:
         g = result["regression_gate"]
@@ -893,6 +894,13 @@ def main() -> None:
         # pids); "forced" = SPARK_BENCH_FORCE=1 overrode an expired gate —
         # such a line must not be compared round-over-round
         "quiet_gate": "passed" if quiet_ok else "forced",
+        # the cores the run had: a line that never says how many cores it
+        # ran on cannot be checked against SPARK_GRAFT_CPUS (VERDICT r13 #3)
+        "cpus": {
+            "nproc": len(os.sched_getaffinity(0)),
+            "spark_graft_cpus": os.environ.get("SPARK_GRAFT_CPUS"),
+            "default_parallelism": spark.sparkContext.defaultParallelism,
+        },
         "sf1_spot": sf1_spot,
         "notes": {
             k: v

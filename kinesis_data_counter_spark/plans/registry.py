@@ -261,7 +261,7 @@ def ndigits: [match("[0-9]"; "g")] | length;
     # (order-insensitively compared) result set. Guide §2: a real
     # deployment's input arrives in many splits — fan_out is a no-op there.
     out = apply_jq_generic(
-        fan_out(docs.select("doc_id", "text"), "doc_id", clamp=False), program
+        fan_out(docs.select("doc_id", "text"), "doc_id"), program
     )
     return out.select(
         F.from_json("value", "id long, clean string, nd long, has_url boolean").alias("r")
@@ -292,8 +292,7 @@ def _q_text_jq_export(spark, sf_dir):
     # fan_out: same single-scan-task serialization as text_jq_normalize —
     # per-record program, partitioning-invariant result set
     out = apply_jq_generic(
-        fan_out(docs.select("doc_id", "lang", "text"), "doc_id", clamp=False),
-        program,
+        fan_out(docs.select("doc_id", "lang", "text"), "doc_id"), program
     )
     return out.select(
         F.from_json(
@@ -337,7 +336,6 @@ def _q_counter_jq_stream_fold(spark, sf_dir):
             F.col("event_id").alias("id"),
         ),
         "id",
-        clamp=False,
     )
     program = r"""
 reduce inputs as $r ({};

@@ -199,37 +199,7 @@ def _exchange_free_partitions(df: DataFrame) -> int | None:
         spark.conf.set(conf_key, prev)
 
 
-# fan_out's size-aware clamp: don't spread an input wider than one
-# partition per this many (estimated) bytes. The round-12 scaling block
-# showed the hot tier FASTER at 8 cores than 32 at sf0.1 (ratios
-# 0.50-0.74) because an unconditional defaultParallelism-wide exchange of
-# a few-hundred-KB input pays more in task scheduling + per-task Python
-# worker round-trips than it buys in parallelism. The clamp derives width
-# from the plan-statistics input size, so it is scale-adaptive, not a
-# local[32] constant: a 100 TB scan estimates petabytes and keeps full
-# width (as does any plan with UNKNOWN stats — Catalyst defaults them to
-# Long.Max); only provably tiny inputs narrow. Tunable per deployment.
-_FANOUT_TASK_BYTES = int(
-    os.environ.get("SPARK_FANOUT_TASK_BYTES", str(64 * 1024))
-)
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's estimated sizeInBytes of ``df``'s optimized logical
-    plan (no job; the QueryExecution memoizes, so the later physical-plan
-    probe reuses the optimization work). None when unreadable."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover - py4j edge
-        return None
-
-
-def fan_out(
-    df: DataFrame,
-    key=None,
-    min_parts: int | None = None,
-    clamp: bool = True,
-) -> DataFrame:
+def fan_out(df: DataFrame, key=None, min_parts: int | None = None) -> DataFrame:
     """Give a compute-heavy stage at least session-level parallelism.
 
     A single-file, single-row-group local input plans as ONE scan task, so
@@ -264,21 +234,6 @@ def fan_out(
             int(spark.conf.get("spark.sql.shuffle.partitions")),
             spark.sparkContext.defaultParallelism,
         )
-        # size-aware clamp (guide §2.2/§6: size partitions by data, don't
-        # schedule tasks smaller than their launch overhead): inputs whose
-        # estimated size can't fill n tasks at _FANOUT_TASK_BYTES each
-        # spread to ceil(size/_FANOUT_TASK_BYTES) instead. Unknown stats
-        # estimate Long.Max and keep full width — the 100 TB path is
-        # untouched by construction.
-        # ``clamp=False`` keeps full width regardless of size: for stages
-        # whose PER-ROW cost dwarfs any bytes heuristic (the pure-Python
-        # jq interpreter at ~45 µs/row), narrowing a tiny input still
-        # serializes real seconds of compute — measured text_jq_normalize
-        # 0.70 -> 0.96 s with the clamp before this opt-out existed.
-        if clamp:
-            size = _plan_size_bytes(df)
-            if size is not None and size < n * _FANOUT_TASK_BYTES:
-                n = max(1, -(-size // _FANOUT_TASK_BYTES))
     static_parts = _exchange_free_partitions(df)
     if static_parts is not None and static_parts >= n:
         return df

@@ -14,22 +14,30 @@ final-invoke output emission.
 Division of labor: record decode + state threading are driver-side Python
 (the reference itself loops ≤1000 records per invoke — this is envelope
 handling, not data processing); every aggregation — predicate evaluation,
-counting, HLL sketching, sketch union — runs in Spark, so ``target_expr``
-semantics and sketch binary format are byte-identical to the batch and
-streaming paths. State carries either a partial row count or a base64
-Datasketches HLL sketch ≈ ``CounterState{RowCount, Base64HLLPP}``
+counting, HLL sketching, sketch union and estimate — runs in Spark, so
+``target_expr`` semantics and sketch binary format are byte-identical to
+the batch and streaming paths. State carries either a partial row count or
+a base64 Datasketches HLL sketch ≈ ``CounterState{RowCount, Base64HLLPP}``
 (counter.go:78-82).
+
+Cost: an invocation is too small for compute to matter; its latency is
+jobs × the per-job floor. An input invoke runs exactly ONE job and no
+Python worker: the records become a one-partition JVM-only plan, and one
+global aggregate over it returns every partial count, each carried sketch
+unioned with the new one and, on the final invoke, the estimates. A
+level-2 merge takes at most one job; a count-only one runs none.
 """
 
 from __future__ import annotations
 
 import base64
 import binascii
+import functools
 import json
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_data_counter_spark.config import (
@@ -84,7 +92,36 @@ def _decode_records(records: list[dict[str, Any]]) -> tuple[list[str], list[str]
     return clean, failures
 
 
-def _counter_agg_column(df, spec: CounterSpec):
+def _event_frame(spark: SparkSession, clean: list[str]) -> DataFrame:
+    """The records as a one-partition, JVM-only plan: ``schema_of_json``
+    runs ``spark.read.json``'s inference during analysis (no job), and a
+    one-slice ``Range`` is SinglePartition (no exchange under a global
+    aggregate). All-or-nothing: a record Spark's parser rejects fails
+    analysis or nulls the whole array, which the row-count check catches."""
+    arr = F.lit("[" + ",".join(clean) + "]")
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(F.from_json(arr, F.schema_of_json(arr)))
+    )
+
+
+def _one_row(
+    spark: SparkSession, cols: dict[str, Column], frame: DataFrame | None = None
+) -> dict[str, Any]:
+    """Evaluate named columns as ONE row in at most one Spark job: a global
+    aggregate over ``frame``, or a literal fold over a one-row range."""
+    if not cols:
+        return {}
+    src = frame if frame is not None else spark.range(0, 1, 1, 1)
+    return src.select(*(c.alias(k) for k, c in cols.items())).collect()[0].asDict()
+
+
+def _hll_union(sketches: list[bytes], new: Column | None = None) -> Column:
+    """Carried sketch literals unioned, with ``new`` (a sketch aggregate)."""
+    parts = [F.lit(s) for s in sketches] + ([new] if new is not None else [])
+    return functools.reduce(F.hll_union, parts)
+
+
+def _counter_agg_column(df: DataFrame, spec: CounterSpec) -> Column:
     """The partial-aggregate expression for one counter over parsed records.
 
     Same type-directed nil/false rule as the batch path (SURVEY.md §2.6.1),
@@ -102,28 +139,6 @@ def _counter_agg_column(df, spec: CounterSpec):
         col, _ = _target_column(df, spec)
         return F.hll_sketch_agg(col, F.lit(spec.hll_precision))
     raise ValueError(spec.counter_type)
-
-
-def _merge_sketches(spark: SparkSession, sketches: list[bytes]) -> bytes:
-    rows = [(s,) for s in sketches if s]
-    df = spark.createDataFrame(rows, "sk binary")
-    return df.agg(F.hll_union_agg("sk").alias("u")).collect()[0].u
-
-
-def _sketch_estimate(spark: SparkSession, sketch: bytes) -> int:
-    return (
-        spark.range(1)
-        .select(F.hll_sketch_estimate(F.lit(sketch)).alias("v"))
-        .collect()[0]
-        .v
-    )
-
-
-def _apply_jq_dict(program: str | None, obj: dict[str, Any]) -> dict[str, Any] | None:
-    """jq-subset applied to one output object (same compiled subset as
-    jq.apply_jq, via the shared dict evaluator — pipes/select/arithmetic/
-    interpolation included). None = a select stage filtered the record."""
-    return eval_jq_object(program, obj)
 
 
 def _state_for(state: dict, spec: CounterSpec, shard_id: str) -> dict[str, Any]:
@@ -144,7 +159,8 @@ def _output_row(spec: CounterSpec, ev: TimeWindowEvent, shard_id: str, value: in
     }
     if shard_id:  # omitted when empty (counter.go:423-425)
         row["shard_id"] = shard_id
-    return _apply_jq_dict(spec.jq_expr, row)
+    # None = a jq select stage filtered the record
+    return eval_jq_object(spec.jq_expr, row)
 
 
 def handle_time_window_event(
@@ -183,6 +199,43 @@ def _arn_match(pattern: str, source: str) -> bool:
     return Arn.parse_strict(pattern).match(source)
 
 
+def _settle(
+    counters: list[CounterSpec],
+    vals: dict[str, Any],
+    event: TimeWindowEvent,
+    shard_id: str,
+    resp: HandlerResponse,
+    level2: bool = False,
+) -> None:
+    """Fold one invocation's results into carried state and, on the final
+    invoke, emit. ``vals`` holds per counter index ``i``: ``c{i}`` the
+    count to add or the new sketch, ``v{i}`` the final HLL estimate."""
+    for i, spec in enumerate(counters):
+        st = _state_for(resp.state, spec, shard_id)
+        if f"c{i}" in vals:
+            if spec.counter_type == COUNT:
+                st["row_count"] = int(st.get("row_count") or 0) + int(vals[f"c{i}"])
+            else:
+                st["base64_hll"] = base64.b64encode(bytes(vals[f"c{i}"])).decode()
+        if not event.is_final_invoke_for_window:
+            continue
+        if spec.aggregate_stream_arn and not level2:
+            # two-level topology: publish the partial, don't finalize
+            # (≈ putIntermediateRecord, counter.go:493-512)
+            resp.intermediate_records.append({
+                "event_source_arn": event.event_source_arn, "shard_id": shard_id,
+                "counter_id": spec.id, "counter_type": spec.counter_type,
+                "window_start": event.window_start_ms,
+                "window_end": event.window_end_ms,
+                "row_count": st.get("row_count"), "base64_hll": st.get("base64_hll"),
+            })
+            continue
+        value = st.get("row_count") if spec.counter_type == COUNT else vals.get(f"v{i}")
+        out = _output_row(spec, event, shard_id, value or 0)
+        if out is not None:
+            resp.outputs.append(out)
+
+
 def _process_input(
     spark: SparkSession,
     counters: list[CounterSpec],
@@ -191,66 +244,32 @@ def _process_input(
 ) -> None:
     clean, failures = _decode_records(event.records)
     resp.batch_item_failures.extend(failures)
+    frame = _event_frame(spark, clean) if clean else None
 
-    if clean:
-        # ONE Spark job computes every routed counter's partial aggregate
-        df = spark.read.json(spark.sparkContext.parallelize(clean, 1))
-        aggs = [
-            _counter_agg_column(df, c).alias(f"c{i}") for i, c in enumerate(counters)
-        ]
-        row = df.agg(*aggs).collect()[0]
-    else:
-        row = None
-
+    # ONE job: partial counts, carried ⊕ new sketches and final estimates
+    # (with no decodable record, a carried estimate is a literal fold)
+    cols: dict[str, Column] = {"n": F.count(F.lit(1))} if clean else {}
     for i, spec in enumerate(counters):
-        st = _state_for(resp.state, spec, event.shard_id)
-        if row is not None:
-            if spec.counter_type == COUNT:
-                st["row_count"] = int(st.get("row_count") or 0) + int(row[f"c{i}"])
-            else:
-                new_sketch: bytes | None = row[f"c{i}"]
-                prior = st.get("base64_hll")
-                sketches = [s for s in (
-                    base64.b64decode(prior) if prior else None, new_sketch
-                ) if s]
-                if len(sketches) == 2:
-                    merged = _merge_sketches(spark, sketches)
-                elif sketches:
-                    merged = sketches[0]
-                else:
-                    merged = None
-                if merged is not None:
-                    st["base64_hll"] = base64.b64encode(bytes(merged)).decode()
-
-        if event.is_final_invoke_for_window:
-            if spec.aggregate_stream_arn:
-                # two-level topology: publish the partial, don't finalize
-                # (≈ putIntermediateRecord, counter.go:493-512)
-                resp.intermediate_records.append(
-                    {
-                        "event_source_arn": event.event_source_arn,
-                        "shard_id": event.shard_id,
-                        "counter_id": spec.id,
-                        "counter_type": spec.counter_type,
-                        "window_start": event.window_start_ms,
-                        "window_end": event.window_end_ms,
-                        "row_count": st.get("row_count"),
-                        "base64_hll": st.get("base64_hll"),
-                    }
-                )
-            else:
-                value = (
-                    st.get("row_count") or 0
-                    if spec.counter_type == COUNT
-                    else (
-                        _sketch_estimate(spark, base64.b64decode(st["base64_hll"]))
-                        if st.get("base64_hll")
-                        else 0
-                    )
-                )
-                row = _output_row(spec, event, event.shard_id, value)
-                if row is not None:  # None = jq select dropped the record
-                    resp.outputs.append(row)
+        new = _counter_agg_column(frame, spec) if clean else None
+        if spec.counter_type == COUNT:
+            if new is not None:
+                cols[f"c{i}"] = new
+            continue
+        prior = _state_for(resp.state, spec, event.shard_id).get("base64_hll")
+        if new is None and not prior:
+            continue
+        sketch = _hll_union([base64.b64decode(prior)] if prior else [], new)
+        if new is not None:
+            cols[f"c{i}"] = sketch
+        if event.is_final_invoke_for_window and not spec.aggregate_stream_arn:
+            cols[f"v{i}"] = F.hll_sketch_estimate(sketch)
+    vals = _one_row(spark, cols, frame)
+    if clean and vals["n"] != len(clean):
+        raise ValueError(
+            f"Spark's JSON parser yielded {vals['n']} of {len(clean)} decoded "
+            "records; refusing to count a partial event"
+        )
+    _settle(counters, vals, event, event.shard_id, resp)
 
 
 def _process_aggregate(
@@ -267,44 +286,25 @@ def _process_aggregate(
     resp.batch_item_failures.extend(failures)
     inters = [json.loads(s) for s in clean]
 
-    for spec in counters:
-        mine = [
-            r
-            for r in inters
-            if r.get("counter_id") == spec.id
-            and r.get("counter_type") == spec.counter_type
-        ]
-        st = _state_for(resp.state, spec, "")
+    vals: dict[str, Any] = {}
+    cols: dict[str, Column] = {}  # evaluated in ONE literal-fold job
+    for i, spec in enumerate(counters):
+        mine = [r for r in inters if (r.get("counter_id"), r.get("counter_type"))
+                == (spec.id, spec.counter_type)]
         if spec.counter_type == COUNT:
-            st["row_count"] = int(st.get("row_count") or 0) + sum(
-                int(r.get("row_count") or 0) for r in mine
-            )
-        else:
-            sketches = [
-                base64.b64decode(r["base64_hll"]) for r in mine if r.get("base64_hll")
-            ]
-            if st.get("base64_hll"):
-                sketches.append(base64.b64decode(st["base64_hll"]))
-            if len(sketches) > 1:
-                st["base64_hll"] = base64.b64encode(
-                    bytes(_merge_sketches(spark, sketches))
-                ).decode()
-            elif sketches:
-                st["base64_hll"] = base64.b64encode(bytes(sketches[0])).decode()
-
-        if event.is_final_invoke_for_window:
-            value = (
-                st.get("row_count") or 0
-                if spec.counter_type == COUNT
-                else (
-                    _sketch_estimate(spark, base64.b64decode(st["base64_hll"]))
-                    if st.get("base64_hll")
-                    else 0
-                )
-            )
-            row = _output_row(spec, event, "", value)
-            if row is not None:  # None = jq select dropped the record
-                resp.outputs.append(row)
+            vals[f"c{i}"] = sum(int(r.get("row_count") or 0) for r in mine)
+            continue
+        carried = _state_for(resp.state, spec, "").get("base64_hll")
+        sketches = [base64.b64decode(s) for s in
+                    [*(r.get("base64_hll") for r in mine), carried] if s]
+        if len(sketches) > 1:
+            cols[f"c{i}"] = _hll_union(sketches)
+        elif sketches:
+            vals[f"c{i}"] = sketches[0]
+        if event.is_final_invoke_for_window and sketches:
+            cols[f"v{i}"] = F.hll_sketch_estimate(_hll_union(sketches))
+    vals.update(_one_row(spark, cols))
+    _settle(counters, vals, event, "", resp, level2=True)
 
 
 def make_intermediate_event(

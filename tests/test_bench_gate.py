@@ -122,6 +122,13 @@ def test_compact_summary_fits_tail_window_and_keeps_contract_shape():
     assert c["sf1_spot_worst"] == {"query": "qb", "ratio": 4.9}
 
 
+def test_compact_summary_carries_cpus():
+    cpus = {"nproc": 4, "spark_graft_cpus": "4", "default_parallelism": 4}
+    r = _full_result()
+    r["cpus"] = cpus
+    assert bench._compact_summary(r)["cpus"] == cpus
+
+
 def test_compact_summary_without_gate_or_spots():
     c = bench._compact_summary(_full_result(with_gate=False, with_spots=False))
     assert "regression_gate" not in c and "sf1_spot_worst" not in c

@@ -109,6 +109,9 @@ def test_bench_emits_one_json_line_at_tiny_sf():
     assert d["sf"] == 0.001
     assert len(d["queries"]) >= 5
     assert all(isinstance(v, (int, float)) for v in d["queries"].values())
+    # the line says how many cores it ran on
+    assert d["cpus"]["nproc"] >= 1 and d["cpus"]["default_parallelism"] >= 1
+    assert d["cpus"]["spark_graft_cpus"] == os.environ.get("SPARK_GRAFT_CPUS")
     # the FULL per-query map must still be emitted on some line (the
     # tracked-history twin of what BENCH_LOCAL.json records)
     full = [json.loads(ln) for ln in json_lines]

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import base64
 import json
+import time
 
 import pytest
 
@@ -169,3 +170,195 @@ def test_arn_routing_ignores_other_streams(spark):
         spark, cfg, _event([{"request_id": 1}], final=True, arn=other)
     )
     assert r.outputs == [] and r.state == {}
+
+
+# ---------------------------------------------------------------------------
+# several counters per event, the JVM-side event parse, and the job budget
+# ---------------------------------------------------------------------------
+
+
+def _multi_cfg(aggregate_stream_arn=None):
+    extra = {"aggregate_stream_arn": aggregate_stream_arn} if aggregate_stream_arn else {}
+    return Config.from_dict({"counters": [
+        {"id": "requests", "counter_type": "count", "target_column": "*",
+         "input_stream_arn": ARN},
+        {"id": "big_purchases", "counter_type": "count", "input_stream_arn": ARN,
+         "target_expr": 'event_type == "purchase" && amount > 100'},
+        {"id": "uniq_users", "counter_type": "approx_count_distinct",
+         "target_column": "user_id", "input_stream_arn": ARN, **extra},
+    ]})
+
+
+def _purchases(n, seed):
+    return [
+        {"user_id": (seed * 7919 + i * 31) % 400,
+         "event_type": "purchase" if i % 3 == 0 else "view",
+         "amount": (i * 37) % 250}
+        for i in range(n)
+    ]
+
+
+def test_three_counters_through_final_invoke(spark):
+    # the final invoke must settle every counter, not just the first
+    # (a regression test for KeyError: 'c1' on the second counter)
+    cfg = _multi_cfg()
+    batches = [_purchases(120, s) for s in range(4)]
+    state = {}
+    for k, objs in enumerate(batches):
+        final = k == len(batches) - 1
+        r = handle_time_window_event(
+            spark, cfg, _event(objs, state=state, final=final, seq0=1000 * k)
+        )
+        assert r.batch_item_failures == []
+        assert (r.outputs == []) is not final
+        state = r.state
+    objs = [o for b in batches for o in b]
+    got = {o["counter_id"]: o["value"] for o in r.outputs}
+    assert got["requests"] == len(objs)
+    assert got["big_purchases"] == sum(
+        o["event_type"] == "purchase" and o["amount"] > 100 for o in objs
+    )
+    assert got["uniq_users"] == pytest.approx(
+        len({o["user_id"] for o in objs}), rel=0.05
+    )
+    assert all(o["shard_id"] == "shard-0" for o in r.outputs)
+
+
+# Record sets whose JVM-side parse must equal spark.read.json's: inferred
+# type conflicts, empty and null-only records, nesting, numbers beyond the
+# long range, non-numeric numbers, duplicate keys, layout whitespace, lone
+# surrogates and keys differing only in case.
+PARSE_CASES = {
+    "int_float": ['{"v": 1}', '{"v": 2.5}', '{"v": 3}'],
+    "int_string": ['{"v": 1}', '{"v": "x"}', '{"v": 1}'],
+    "null_only": ['{"n": null, "a": 1}', '{"n": null, "a": 2}'],
+    "empty_object": ["{}", "{}", '{"a": 1}'],
+    "only_empty": ["{}", "{}"],
+    "nested_keys": ['{"s": {"a": 1}}', '{"s": {"b": "x"}}',
+                    '{"s": {"a": 2, "c": {"d": true}}}'],
+    "mixed_arrays": ['{"arr": [1, "a", null]}', '{"arr": [1, 2]}',
+                     '{"arr": [{"x": 1}, {"y": 2}]}', '{"arr": []}'],
+    "beyond_long": ['{"big": 123456789012345678901234567890}', '{"big": 1}',
+                    '{"big": -99999999999999999999}'],
+    "bool_int": ['{"f": true}', '{"f": 1}', '{"f": false}'],
+    "object_scalar": ['{"o": {"k": 1}}', '{"o": 5}', '{"o": "s"}'],
+    "non_numeric": ['{"x": NaN}', '{"x": Infinity}', '{"x": -Infinity}',
+                    '{"x": 1.5}'],
+    "duplicate_keys": ['{"a": 1, "a": 2}', '{"a": 3}'],
+    "pretty_printed": ['{\n  "a": 1,\n  "b": {\n    "c": [1, 2]\n  }\n}',
+                       '{"a": 2, "b": {"c": []}}'],
+    "lone_surrogate": ['{"s": "\\ud800"}', '{"s": "ok"}'],
+    "case_keys": ['{"a": 1}', '{"A": 2}', '{"a": 3, "B": true}'],
+    "leading_ws": ['   {"a": 1}', '\t\n{"a": 2}', '{"a": 3}  '],
+}
+
+
+def _column_summary(df):
+    """count(*), then per column (addressed by position, so case-only key
+    differences stay unambiguous) its non-null count and HLL estimate."""
+    from pyspark.sql import functions as F
+
+    df = df.toDF(*[f"_{i}" for i in range(len(df.columns))])
+    aggs = [F.count(F.lit(1))]
+    for c in df.columns:
+        aggs += [
+            F.count(c),
+            F.hll_sketch_estimate(F.hll_sketch_agg(F.col(c).cast("string"))),
+        ]
+    return tuple(df.agg(*aggs).collect()[0])
+
+
+@pytest.mark.parametrize("name", sorted(PARSE_CASES))
+def test_event_frame_matches_read_json(spark, name):
+    from kinesis_data_counter_spark.streaming.handler import _event_frame
+
+    clean = PARSE_CASES[name]
+    assert all(isinstance(json.loads(s), dict) for s in clean)
+    old = spark.read.json(spark.sparkContext.parallelize(clean, 1))
+    new = _event_frame(spark, clean)
+    assert new.schema == old.schema
+    assert _column_summary(new) == _column_summary(old)
+
+
+def test_record_spark_rejects_raises_not_zero(spark):
+    # Python's json takes a 1,001-digit integer; Spark's parser does not.
+    # The array parse is all-or-nothing, so the event must fail loudly
+    # rather than count nothing.
+    huge = '{"request_id": 1' + "0" * 1000 + "}"
+    ev = TimeWindowEvent(
+        records=[{"sequence_number": "0",
+                  "data": base64.b64encode(huge.encode()).decode()}]
+        + _records([{"request_id": 1}], 1),
+        window_start_ms=WS, window_end_ms=WE, event_source_arn=ARN,
+        shard_id="s", is_final_invoke_for_window=True,
+    )
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises((AnalysisException, ValueError)):
+        handle_time_window_event(spark, _cfg(), ev)
+
+
+def test_lost_records_raise(spark, monkeypatch):
+    # a parse that yields fewer rows than decoded records (from_json
+    # nulling the array) must raise instead of under-counting
+    from kinesis_data_counter_spark.streaming import handler
+
+    real = handler._event_frame
+    monkeypatch.setattr(handler, "_event_frame", lambda s, clean: real(s, clean[:1]))
+    with pytest.raises(ValueError, match="1 of 3"):
+        handle_time_window_event(
+            spark, _cfg(), _event([{"request_id": i} for i in range(3)])
+        )
+
+
+def _jobs_run(spark, fn):
+    """Spark jobs fn() launched: job ids are allocated sequentially, so
+    count the ids strictly between two marker jobs."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def mark(tag):
+        sc.setJobGroup(tag, tag)
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        deadline = time.time() + 30
+        while not tracker.getJobIdsForGroup(tag):
+            assert time.time() < deadline, f"marker {tag} never reported"
+            time.sleep(0.01)
+        return tracker.getJobIdsForGroup(tag)[0]
+
+    lo = mark(f"jobs-before-{id(fn)}")
+    out = fn()
+    hi = mark(f"jobs-after-{id(fn)}")
+    return hi - lo - 1, out
+
+
+def test_job_budget_per_invoke(spark):
+    cfg = _multi_cfg(aggregate_stream_arn=AGG_ARN)
+    first = handle_time_window_event(spark, cfg, _event(_purchases(200, 1)))
+    # non-final input invoke folding carried HLL state into its aggregate
+    n, mid = _jobs_run(spark, lambda: handle_time_window_event(
+        spark, cfg, _event(_purchases(200, 2), state=first.state, seq0=500)))
+    assert n == 1
+    # final input invoke: same single job, now also publishing
+    n, fin = _jobs_run(spark, lambda: handle_time_window_event(
+        spark, cfg, _event(_purchases(200, 3), state=mid.state, final=True)))
+    assert n == 1 and len(fin.intermediate_records) == 1
+    # level-2 merge of two sketches plus the estimate: at most one job
+    other = handle_time_window_event(
+        spark, cfg, _event(_purchases(200, 4), final=True, shard="shard-1"))
+    inters = fin.intermediate_records + other.intermediate_records
+    n, agg = _jobs_run(spark, lambda: handle_time_window_event(
+        spark, cfg, make_intermediate_event(inters, AGG_ARN, WS, WE)))
+    assert n <= 1 and len(agg.outputs) == 1
+    # a count-only level-2 merge is pure driver arithmetic
+    count_cfg = _cfg(id="global", aggregate_stream_arn=AGG_ARN)
+    lvl1 = handle_time_window_event(
+        spark, count_cfg, _event([{"request_id": i} for i in range(9)], final=True))
+    n, out = _jobs_run(spark, lambda: handle_time_window_event(
+        spark, count_cfg, make_intermediate_event(lvl1.intermediate_records,
+                                                  AGG_ARN, WS, WE)))
+    assert n == 0 and out.outputs[0]["value"] == 9
