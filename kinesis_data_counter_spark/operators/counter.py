@@ -9,6 +9,11 @@ plans a partial (map-side) HashAggregate, a shuffle exchange on the group
 keys, and a final HashAggregate, which is exactly the reference's
 shard-partials → merge pipeline with the exchange played by the shuffle.
 
+A7 (multi-counter fan-out, ``assemble_counters``): like the reference,
+which decodes each record once and updates every routed counter from it
+(counter.go:170-204), counters that share a window are ONE multi-column
+aggregate over one scan; each counter's result is a projection of it.
+
 For deployments that genuinely split the two levels into separate jobs (the
 reference's aggregate-stream topology, README.md:128-151), use
 ``partial_counter`` → sink → ``merge_partials``: the hand-off row carries an
@@ -94,13 +99,61 @@ def tumbling_window(ts_col: str | Column, size: str) -> Column:
     return F.window(ts_col, size)
 
 
+def _counter_frames(
+    df: DataFrame,
+    specs: list[CounterSpec],
+    ts_col: str,
+    shard_col: str | None,
+    event_source_arn: str | None,
+) -> dict[str, DataFrame]:
+    """The one counter builder: per-window results of every spec, keyed by id.
+
+    Specs sharing a window share ONE ``groupBy(window[, shard]).agg(v0, v1,
+    …)``; each counter is a ``select`` of its own value column from it. An
+    aggregate read by more than one counter is materialized with
+    ``localCheckpoint`` (batch only): Spark never reuses a Python-DataSource
+    scan across union branches, and ColumnPruning would split a shared lazy
+    aggregate back into one scan per branch. ``localCheckpoint`` rather
+    than ``persist``: the CacheManager matches persisted plans by canonical
+    plan, so a later call over equal input could be served a stale result.
+    """
+    groups: dict[str, list[CounterSpec]] = {}
+    for spec in specs:
+        groups.setdefault(spec.window, []).append(spec)
+    out: dict[str, DataFrame] = {}
+    for window, group in groups.items():
+        keys: list[Column] = [tumbling_window(ts_col, window).alias("window")]
+        if shard_col:
+            keys.append(F.col(shard_col).alias("__shard_id"))
+        agg = df.groupBy(*keys).agg(
+            *[counter_value_column(df, s).alias(f"__v{i}") for i, s in enumerate(group)]
+        )
+        if len(group) > 1:
+            agg = agg.localCheckpoint()
+        for i, spec in enumerate(group):
+            cols: list[Column] = [
+                F.lit(event_source_arn or spec.input_stream_arn).alias("event_source_arn"),
+                F.unix_millis(F.col("window.start")).alias("window_start"),
+                F.unix_millis(F.col("window.end")).alias("window_end"),
+                F.lit(spec.id).alias("counter_id"),
+                F.lit(spec.counter_type).alias("counter_type"),
+            ]
+            if shard_col:
+                cols.append(F.col("__shard_id").cast("string").alias("shard_id"))
+            cols.append(F.col(f"__v{i}").cast("long").alias("value"))
+            res = agg.select(*cols)
+            if spec.jq_expr:
+                res = apply_jq(res, spec.jq_expr)  # F8: jq-subset → projection
+            out[spec.id] = res
+    return out
+
+
 def build_counter(
     df: DataFrame,
     spec: CounterSpec,
     ts_col: str = "ts",
     shard_col: str | None = None,
     event_source_arn: str | None = None,
-    apply_output_transform: bool = True,
 ) -> DataFrame:
     """records → per-window counter results (the whole reference pipeline).
 
@@ -111,29 +164,11 @@ def build_counter(
     omits it when empty (counter.go:423-425).
 
     Works identically on batch and streaming DataFrames (add a watermark
-    upstream for streaming append mode — see streaming/runner.py).
+    upstream for streaming append mode — see streaming/runner.py): it is the
+    one-spec case of ``assemble_counters``'s builder, which never
+    checkpoints a single counter's aggregate.
     """
-    keys: list[Column] = [tumbling_window(ts_col, spec.window).alias("window")]
-    if shard_col:
-        keys.append(F.col(shard_col).alias("__shard_id"))
-
-    agg = df.groupBy(*keys).agg(counter_value_column(df, spec).alias("value"))
-
-    arn = event_source_arn or spec.input_stream_arn
-    cols: list[Column] = [
-        F.lit(arn).alias("event_source_arn"),
-        F.unix_millis(F.col("window.start")).alias("window_start"),
-        F.unix_millis(F.col("window.end")).alias("window_end"),
-        F.lit(spec.id).alias("counter_id"),
-        F.lit(spec.counter_type).alias("counter_type"),
-    ]
-    if shard_col:
-        cols.append(F.col("__shard_id").cast("string").alias("shard_id"))
-    cols.append(F.col("value").cast("long").alias("value"))
-    out = agg.select(*cols)
-    if apply_output_transform and spec.jq_expr:
-        out = apply_jq(out, spec.jq_expr)  # F8: jq-subset → projection
-    return out
+    return _counter_frames(df, [spec], ts_col, shard_col, event_source_arn)[spec.id]
 
 
 # ---------------------------------------------------------------------------
@@ -239,18 +274,19 @@ def assemble_counters(
     """Route a source to every matching counter, one result DataFrame each.
 
     ≈ the reference's handler fan-out (counter.go:170-204): ARN-glob routing
-    picks the counters (F6, arn.go:61-86), each runs as an independent
-    aggregation over the SAME scan. Spark shares the scan across the
-    returned plans when they execute in one job (or cache the input df
-    explicitly for repeated separate actions).
+    picks the counters (F6, arn.go:61-86); counters sharing a window are
+    computed by ONE aggregate over one scan of ``df``, materialized with
+    ``localCheckpoint`` when more than one counter reads it, and each
+    returned frame selects its own value column from it. Distinct windows
+    still read ``df`` once per window group.
+
+    Batch only (it may checkpoint); the CLI's ``--follow`` fan-out goes
+    through ``streaming.runner.run_counter_stream_once`` per counter.
     """
-    return {
-        spec.id: build_counter(
-            df, spec, ts_col=ts_col, shard_col=shard_col,
-            event_source_arn=event_source_arn,
-        )
-        for spec in config.counters_for_source(event_source_arn)
-    }
+    return _counter_frames(
+        df, config.counters_for_source(event_source_arn), ts_col, shard_col,
+        event_source_arn,
+    )
 
 
 def union_counter_results(results: dict[str, DataFrame]) -> DataFrame:

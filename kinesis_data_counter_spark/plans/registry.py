@@ -454,15 +454,22 @@ def _q_theta_set_ops_users(spark, sf_dir):
 
 
 def _q_counter_multi_fanout(spark, sf_dir):
-    # A7: several counters over one shared (cached) scan, results unioned
+    # A7: several counters over one shared (checkpointed) aggregate of one
+    # scan, results unioned
+    from kinesis_data_counter_spark.config import Config
+    from kinesis_data_counter_spark.operators.counter import (
+        assemble_counters,
+        union_counter_results,
+    )
+
     (ev,) = _tables(spark, sf_dir, "events")
     s1 = CounterSpec(id="req_count", counter_type="count", target_column="*",
                      window="1 day", input_stream_arn=EVENTS_ARN).validate()
     s2 = CounterSpec(id="click_count", counter_type="count",
                      target_expr='string_contains(event_type, "click")',
                      window="1 day", input_stream_arn=EVENTS_ARN).validate()
-    return build_counter(ev, s1, ts_col="ts").unionByName(
-        build_counter(ev, s2, ts_col="ts")
+    return union_counter_results(
+        assemble_counters(ev, Config(counters=[s1, s2]), EVENTS_ARN, ts_col="ts")
     )
 
 

@@ -14,7 +14,8 @@ line is one record's data (JSON). Optional envelope keys ``__pk`` (partition
 key) and ``__arrival_ms`` (approximate arrival time) are lifted into columns
 when present, mirroring the Kinesis record metadata the reference reads
 (run.go:107); the full line stays in ``data`` for the engine's JSON-decode
-stage (S4).
+stage (S4). A line that is not a JSON object has a NULL
+``approximate_arrival``, so windowing on arrival time drops it.
 
 Output schema (per record ≈ KinesisEventRecord):
   shard_id string, sequence_number bigint, partition_key string,
@@ -110,7 +111,7 @@ def _record_batches(
     columnar Arrow batches of ``_BATCH_ROWS`` records."""
     seqs: list[int] = []
     pks: list[str | None] = []
-    arrivals: list[int] = []  # epoch micros
+    arrivals: list[int | None] = []  # epoch micros
     datas: list[str] = []
 
     def _flush() -> pa.RecordBatch:
@@ -136,17 +137,21 @@ def _record_batches(
             line = line.strip()
             if not line:
                 continue
-            pk, arrival_ms = None, 0
+            pk, arrival_us = None, None
             try:
                 obj = json.loads(line)
                 if isinstance(obj, dict):
                     pk = obj.get("__pk")
-                    arrival_ms = int(obj.get("__arrival_ms", 0))
+                    arrival_us = int(obj.get("__arrival_ms", 0)) * 1000
             except ValueError:
-                pass  # corrupt lines still flow to the S4 bad-record router
+                pass
+            # a line that is not a JSON object keeps its data for the S4
+            # bad-record router but has no arrival time: windowing on it
+            # drops the record, as the reference drops an undecodable
+            # record as a batch-item failure (counter.go:241-252)
             seqs.append(seq)
             pks.append(pk)
-            arrivals.append(arrival_ms * 1000)
+            arrivals.append(arrival_us)
             datas.append(line)
             if len(seqs) >= _BATCH_ROWS:
                 yield _flush()

@@ -599,9 +599,10 @@ SHOWCASE: dict[str, str] = {
         "state rows, never raw events."
     ),
     "counter_multi_fanout": (
-        "A7: several counters over ONE shared scan, results unioned — "
-        "the plan shows a single parquet scan fanned into per-counter "
-        "aggregates, not one scan per counter."
+        "A7: several counters over ONE scan — one multi-column aggregate "
+        "(count and count_if side by side), checkpointed because two "
+        "counters read it; the union's plan reads only that checkpoint "
+        "(Scan ExistingRDD), never the parquet file again."
     ),
     "counter_json_props": (
         "Schemaless property counting (S4 analog): get_json_object "

@@ -5,6 +5,8 @@ from __future__ import annotations
 import io
 import json
 
+import pytest
+
 from kinesis_data_counter_spark.__main__ import main, parse_window, window_minutes
 
 
@@ -68,7 +70,13 @@ def test_cli_expr_counter(spark, sf_dir):
     ).count()
 
 
-def test_cli_config_multi_counter_fanout(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("source", ["parquet", "shards"])
+def test_cli_config_multi_counter_fanout(spark, sf_dir, tmp_path, source):
+    if source == "parquet":
+        path = f"{sf_dir}/events.parquet"
+        n_records = spark.read.parquet(path).count()
+    else:
+        path, n_records = _make_stream_dir(tmp_path), 200
     cfg = tmp_path / "counters.yaml"
     cfg.write_text(
         """
@@ -91,16 +99,14 @@ counters:
 """
     )
     buf = io.StringIO()
-    rc = main(
-        ["--path", f"{sf_dir}/events.parquet", "--config", str(cfg)], out=buf
-    )
+    rc = main(["--path", path, "--config", str(cfg)], out=buf)
     assert rc == 0
     lines = [json.loads(l) for l in buf.getvalue().strip().splitlines()]
     ids = {l["counter_id"] for l in lines}
     # ARN routing: the '*' counters run, the eu-west-1-only one does not
     assert ids == {"req_count", "click_count"}
     req_total = sum(l["value"] for l in lines if l["counter_id"] == "req_count")
-    assert req_total == spark.read.parquet(f"{sf_dir}/events.parquet").count()
+    assert req_total == n_records
 
 
 def test_cli_config_follow_runs_multi_counter_stream(spark, sf_dir, tmp_path):
@@ -127,8 +133,6 @@ def test_cli_config_follow_runs_multi_counter_stream(spark, sf_dir, tmp_path):
 
 
 def test_cli_window_parse_errors_are_clean(sf_dir):
-    import pytest
-
     # multi-unit intervals are valid and summed
     assert window_minutes("1 hour 30 minutes") == 90
     for bad in ("1 week", "90", "soon"):
@@ -223,3 +227,89 @@ def test_cli_config_version_gate(spark, sf_dir, tmp_path):
     )
     assert main(["--path", f"{sf_dir}/events.parquet", "--config", str(cfg)],
                 out=io.StringIO()) == 2
+
+
+_FANOUT_CONFIG = """
+counters:
+  - id: requests
+    counter_type: count
+    target_column: "*"
+    window: 1 minute
+  - id: clicks
+    counter_type: count
+    target_expr: 'event_type == "click"'
+    window: 1 minute
+  - id: uniq_users
+    counter_type: approx_count_distinct
+    target_column: user_id
+    window: 1 minute
+  - id: reshaped
+    counter_type: count
+    target_column: "*"
+    window: 1 minute
+    jq_expr: '{"time": .window_start, "name": "reshaped", "value": .value}'
+"""
+
+
+def test_cli_drops_a_truncated_shard_line(spark, tmp_path):
+    # a line cut off in transit has no arrival time: it is dropped, as the
+    # reference drops an undecodable record (counter.go:241-252), instead
+    # of being counted into a window starting at epoch 0
+    d = _make_stream_dir(tmp_path)
+    with open(f"{d}/shard-001.jsonl", "a") as f:
+        f.write('{"__pk": "u1", "__arrival_ms": 16383\n')
+    cfg = tmp_path / "c.yaml"
+    cfg.write_text(_FANOUT_CONFIG)
+    buf = io.StringIO()
+    assert main(["--path", d, "--config", str(cfg)], out=buf) == 0
+    lines = [json.loads(l) for l in buf.getvalue().strip().splitlines()]
+    assert all(l.get("window_start") != 0 and l.get("time") != 0 for l in lines)
+    by_id = {}
+    for l in lines:
+        by_id.setdefault(l.get("counter_id") or l["name"], []).append(l["value"])
+    assert sum(by_id["requests"]) == sum(by_id["reshaped"]) == 200
+    assert sum(by_id["clicks"]) == sum(1 for i in range(200) if i % 3)
+    assert len(by_id["uniq_users"]) == 5 and max(by_id["uniq_users"]) == 7
+
+
+def _source_tasks(spark, jobs) -> int:
+    """Tasks of ``jobs`` that ran a stage reading the kinesis_replay scan."""
+    sc = spark.sparkContext
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    graph = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph
+    n = 0
+    for j in jobs:
+        for s in tracker.getJobInfo(j).stageIds:
+            dot = graph.makeDotFile(store.operationGraphForStage(s))
+            if "BatchScan kinesis_replay" in dot:
+                n += tracker.getStageInfo(s).numCompletedTasks
+    return n
+
+
+def test_cli_fanout_scans_the_source_once(spark, tmp_path, spark_jobs):
+    # 4 routed counters on one window share one aggregate over one scan:
+    # the union reads only its checkpoint, and the CLI run is 5 jobs (the
+    # aggregate's map stage over the scan, its reduce into the checkpoint,
+    # and the sorted output's sample, map and result), not 7
+    from kinesis_data_counter_spark.__main__ import _load_input, build_parser
+    from kinesis_data_counter_spark.config import Config
+    from kinesis_data_counter_spark.operators.counter import (
+        assemble_counters,
+        union_counter_results,
+    )
+
+    d = _make_stream_dir(tmp_path)
+    cfg = tmp_path / "c.yaml"
+    cfg.write_text(_FANOUT_CONFIG)
+    frames = assemble_counters(
+        _load_input(spark, d, "ts"), Config.load(str(cfg)),
+        build_parser().get_default("stream_arn"),
+    )
+    plan = union_counter_results(frames)._jdf.queryExecution().executedPlan()
+    assert "BatchScan" not in plan.toString()
+
+    buf = io.StringIO()
+    jobs, rc = spark_jobs(lambda: main(["--path", d, "--config", str(cfg)], out=buf))
+    assert rc == 0 and len(buf.getvalue().splitlines()) == 4 * 5
+    assert len(jobs) == 5
+    assert 0 < _source_tasks(spark, jobs) <= 3  # one task per shard

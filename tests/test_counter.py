@@ -11,6 +11,7 @@ expr-filtered distinct — the same ε the reference accepts
 from __future__ import annotations
 
 import datetime as dt
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -175,3 +176,93 @@ def test_window_alignment_matches_truncation(spark):
     r = build_counter(df, spec, ts_col="time").collect()[0]
     trunc = ts.replace(second=0, microsecond=0)
     assert r.window_start == int(trunc.timestamp() * 1000)
+
+
+def _fanout_frame(spark, tmp_path, source: str, n: int = 3000):
+    """n events over 20 minutes as a parquet frame or, with one truncated
+    line more, as a kinesis_replay shard dir; shard column name too."""
+    from kinesis_data_counter_spark.sources.replay_source import (
+        open_shard_records,
+        write_shard_files,
+    )
+
+    t0 = int(WINDOW_START.timestamp() * 1000)
+    events = [
+        {"user_id": (i * 7) % 150, "event_type": ("click", "view", "buy")[i % 3],
+         "amount": None if i % 11 == 5 else i % 40, "ms": t0 + i * 400}
+        for i in range(n)
+    ]
+    if source == "parquet":
+        rows = [
+            (dt.datetime.fromtimestamp(e["ms"] / 1000, dt.timezone.utc), e["user_id"],
+             e["event_type"], e["amount"], f"s{e['user_id'] % 3}")
+            for e in events
+        ]
+        path = str(tmp_path / "events.parquet")
+        spark.createDataFrame(
+            rows, "ts timestamp, user_id long, event_type string, amount long, shard string"
+        ).write.parquet(path)
+        return spark.read.parquet(path), "shard"
+    d = str(tmp_path / "stream")
+    recs = [
+        (f"u{e['user_id']}", json.dumps(
+            {"__pk": f"u{e['user_id']}", "__arrival_ms": e["ms"], **e}))
+        for e in events
+    ]
+    recs.append(("u1", '{"__pk": "u1", "__arrival_ms": 16'))  # cut in transit
+    write_shard_files(iter(recs), d, num_shards=3)
+    return open_shard_records(spark, d), "shard_id"
+
+
+@pytest.mark.parametrize("source", ["parquet", "shards"])
+@pytest.mark.parametrize("with_shard", [False, True])
+def test_assemble_counters_matches_per_spec_build(spark, tmp_path, source, with_shard):
+    """The shared per-window aggregate of ``assemble_counters`` equals the
+    union of one ``build_counter`` per spec, row for row, HLL estimates
+    included — over count *, a boolean expr, a nullable column, HLL and a
+    jq reshape on two windows."""
+    from kinesis_data_counter_spark.config import Config
+    from kinesis_data_counter_spark.operators.counter import (
+        assemble_counters,
+        union_counter_results,
+    )
+
+    df, shard = _fanout_frame(spark, tmp_path, source)
+    shard_col = shard if with_shard else None
+    specs = [
+        CounterSpec(id="all", counter_type="count", target_column="*",
+                    window="1 minute", input_stream_arn=ARN),
+        CounterSpec(id="clicks", counter_type="count",
+                    target_expr='event_type == "click"', window="1 minute",
+                    input_stream_arn=ARN),
+        CounterSpec(id="amounts", counter_type="count", target_column="amount",
+                    window="5 minutes", input_stream_arn=ARN),
+        CounterSpec(id="users", counter_type="approx_count_distinct",
+                    target_column="user_id", window="1 minute", input_stream_arn=ARN),
+        CounterSpec(id="reshaped", counter_type="count", target_column="*",
+                    window="5 minutes", input_stream_arn=ARN,
+                    jq_expr='{"time": .window_start, "name": "r", "value": .value}'),
+    ]
+    cfg = Config(counters=[s.validate() for s in specs])
+    fanned = union_counter_results(
+        assemble_counters(df, cfg, ARN, ts_col="ts", shard_col=shard_col))
+    single = union_counter_results({
+        s.id: build_counter(df, s, ts_col="ts", shard_col=shard_col,
+                            event_source_arn=ARN)
+        for s in cfg.counters
+    })
+    assert fanned.schema == single.schema
+
+    def lines(frame):
+        return sorted(json.dumps(r.asDict(), sort_keys=True) for r in frame.collect())
+
+    got = lines(fanned)
+    assert got == lines(single)
+    rows = [json.loads(l) for l in got]
+    total = {c: sum(r["value"] for r in rows if r["counter_id"] == c)
+             for c in ("all", "clicks", "amounts")}
+    assert total == {"all": 3000, "clicks": 1000,
+                     "amounts": 3000 - sum(1 for i in range(3000) if i % 11 == 5)}
+    assert sum(r["value"] for r in rows if r.get("name") == "r") == 3000
+    assert {r["window_start"] for r in rows if r["counter_id"] == "users"} == {
+        r["window_start"] for r in rows if r["counter_id"] == "all"}

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import base64
 import json
-import time
 
 import pytest
 
@@ -311,54 +310,29 @@ def test_lost_records_raise(spark, monkeypatch):
         )
 
 
-def _jobs_run(spark, fn):
-    """Spark jobs fn() launched: job ids are allocated sequentially, so
-    count the ids strictly between two marker jobs."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def mark(tag):
-        sc.setJobGroup(tag, tag)
-        try:
-            sc.parallelize([0], 1).count()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        deadline = time.time() + 30
-        while not tracker.getJobIdsForGroup(tag):
-            assert time.time() < deadline, f"marker {tag} never reported"
-            time.sleep(0.01)
-        return tracker.getJobIdsForGroup(tag)[0]
-
-    lo = mark(f"jobs-before-{id(fn)}")
-    out = fn()
-    hi = mark(f"jobs-after-{id(fn)}")
-    return hi - lo - 1, out
-
-
-def test_job_budget_per_invoke(spark):
+def test_job_budget_per_invoke(spark, spark_jobs):
     cfg = _multi_cfg(aggregate_stream_arn=AGG_ARN)
     first = handle_time_window_event(spark, cfg, _event(_purchases(200, 1)))
     # non-final input invoke folding carried HLL state into its aggregate
-    n, mid = _jobs_run(spark, lambda: handle_time_window_event(
+    jobs, mid = spark_jobs(lambda: handle_time_window_event(
         spark, cfg, _event(_purchases(200, 2), state=first.state, seq0=500)))
-    assert n == 1
+    assert len(jobs) == 1
     # final input invoke: same single job, now also publishing
-    n, fin = _jobs_run(spark, lambda: handle_time_window_event(
+    jobs, fin = spark_jobs(lambda: handle_time_window_event(
         spark, cfg, _event(_purchases(200, 3), state=mid.state, final=True)))
-    assert n == 1 and len(fin.intermediate_records) == 1
+    assert len(jobs) == 1 and len(fin.intermediate_records) == 1
     # level-2 merge of two sketches plus the estimate: at most one job
     other = handle_time_window_event(
         spark, cfg, _event(_purchases(200, 4), final=True, shard="shard-1"))
     inters = fin.intermediate_records + other.intermediate_records
-    n, agg = _jobs_run(spark, lambda: handle_time_window_event(
+    jobs, agg = spark_jobs(lambda: handle_time_window_event(
         spark, cfg, make_intermediate_event(inters, AGG_ARN, WS, WE)))
-    assert n <= 1 and len(agg.outputs) == 1
+    assert len(jobs) <= 1 and len(agg.outputs) == 1
     # a count-only level-2 merge is pure driver arithmetic
     count_cfg = _cfg(id="global", aggregate_stream_arn=AGG_ARN)
     lvl1 = handle_time_window_event(
         spark, count_cfg, _event([{"request_id": i} for i in range(9)], final=True))
-    n, out = _jobs_run(spark, lambda: handle_time_window_event(
+    jobs, out = spark_jobs(lambda: handle_time_window_event(
         spark, count_cfg, make_intermediate_event(lvl1.intermediate_records,
                                                   AGG_ARN, WS, WE)))
-    assert n == 0 and out.outputs[0]["value"] == 9
+    assert not jobs and out.outputs[0]["value"] == 9
