@@ -37,6 +37,7 @@ from kinesis_data_counter_spark.sources.replay_source import (
     open_shard_records,
     write_shard_files,
 )
+from kinesis_data_counter_spark.streaming.runner import drain
 
 ARN = "arn:aws:kinesis:us-east-1:000000000000:stream/demo"
 BASE_MS = int(dt.datetime(2021, 12, 1, 11, 19, tzinfo=dt.timezone.utc).timestamp() * 1000)
@@ -79,14 +80,11 @@ def main(n_polls: int = 3) -> int:
         src = open_shard_records(spark, stream_dir, streaming=True)
         counted = build_counter(src, spec, ts_col="approximate_arrival")
         seen: list = []
-        q = (
+        drain(
             counted.writeStream.foreachBatch(lambda b, _e: seen.extend(b.collect()))
             .outputMode("complete")
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(120)
         print(f"-- poll {poll + 1}: {written} records on the wire")
         for r in sorted(seen, key=lambda r: r.window_start):
             print(json.dumps({k: r[k] for k in ("window_start", "window_end", "counter_id", "value")}))

@@ -27,6 +27,14 @@ hash index), ``stream_neardup_index`` (MinHash band-index probe-and-append),
 maintenance and querying), ``stream_gated_ingest`` (expectations-gated
 admit/quarantine), ``stream_dedup`` (exactly-once-by-id),
 ``stream_stream_interval_join``, ``stream_enrich``, ``stream_sessionize``.
+
+Every bounded run above goes through ONE lifecycle, ``drain(writer)``:
+start the query with the ``availableNow`` trigger (everything available
+at start, in one or more micro-batches, then stop), wait up to
+``_DRAIN_TIMEOUT_S`` seconds, and stop it. A query still running at the
+deadline is stopped and raises ``TimeoutError`` — its tables are partial
+and no caller may read them as a finished drain. A failing micro-batch
+propagates as ``StreamingQueryException``, again after the stop.
 """
 
 from __future__ import annotations
@@ -39,6 +47,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from kinesis_data_counter_spark.config import CounterSpec
 from kinesis_data_counter_spark.operators.counter import (
@@ -89,6 +98,31 @@ def _read_stream(
     return sdf
 
 
+# Upper bound on one bounded drain, in seconds. Read when ``drain`` runs
+# (not bound as a default), so a test can shrink it with monkeypatch.
+_DRAIN_TIMEOUT_S = 300
+
+
+def drain(writer: DataStreamWriter) -> StreamingQuery:
+    """Run a configured stream writer to the end of its input.
+
+    Starts ``writer`` with the ``availableNow`` trigger and waits for it.
+    The query is stopped in every case; a timeout raises ``TimeoutError``
+    and a failed micro-batch raises ``StreamingQueryException``. Returns
+    the stopped query, whose ``recentProgress`` stays readable.
+    """
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} did not drain within "
+                f"{_DRAIN_TIMEOUT_S} s"
+            )
+    finally:
+        q.stop()
+    return q
+
+
 def stream_counter(
     spark: SparkSession,
     path: str,
@@ -114,7 +148,6 @@ def run_counter_stream_once(
     path: str,
     spec: CounterSpec,
     ts_col: str = "ts",
-    timeout_sec: int = 300,
     event_source_arn: str | None = None,
 ) -> DataFrame:
     """Run the streaming counter over a bounded path and return the result.
@@ -129,18 +162,11 @@ def run_counter_stream_once(
         event_source_arn=event_source_arn,
     )
     name = f"counter_stream_{uuid.uuid4().hex[:12]}"
-    q = (
+    drain(
         out.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive
-            q.stop()
     return spark.table(name)
 
 
@@ -149,7 +175,6 @@ def run_counter_stream_update_once(
     path: str,
     spec: CounterSpec,
     ts_col: str = "ts",
-    timeout_sec: int = 300,
     max_files_per_trigger: int | None = 1,
     event_source_arn: str | None = None,
 ) -> DataFrame:
@@ -180,17 +205,10 @@ def run_counter_stream_update_once(
         for r in batch_df.collect():  # bounded: updated windows only
             rows.append((epoch, r["window_start"], r["window_end"], r["value"]))
 
-    q = (
+    drain(
         out.writeStream.foreachBatch(_collect)
         .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive
-            q.stop()
     return spark.createDataFrame(
         rows, "batch_id long, window_start long, window_end long, value long"
     )
@@ -204,7 +222,6 @@ def stream_two_level(
     ts_col: str = "ts",
     shard_col: str | None = None,
     max_files_per_trigger: int | None = 1,
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """The reference's two-level aggregate-stream topology across a REAL
     job/storage boundary.
@@ -231,17 +248,10 @@ def stream_two_level(
             epoch,
         )
 
-    q = (
+    drain(
         sdf.writeStream.foreachBatch(_emit)
         .option("checkpointLocation", exchange_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive
-            q.stop()
     return merge_partials(_read_batch_keyed(spark, exchange_dir), spec)
 
 
@@ -256,7 +266,6 @@ def stream_quantile_rollup(
     k: int = 200,
     ts_col: str = "ts",
     max_files_per_trigger: int | None = 1,
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """``stream_two_level`` for rank statistics: per-micro-batch KLL
     partials (operators/sketches.py::quantile_partials) appended to the
@@ -281,17 +290,10 @@ def stream_quantile_rollup(
             epoch,
         )
 
-    q = (
+    drain(
         sdf.writeStream.foreachBatch(_emit)
         .option("checkpointLocation", exchange_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive
-            q.stop()
     return SK.merge_quantile_partials(
         _read_batch_keyed(spark, exchange_dir), quantiles=quantiles, k=k
     )
@@ -306,7 +308,6 @@ def stream_cms_rollup(
     hex_chars: int = 2,
     ts_col: str = "ts",
     max_files_per_trigger: int | None = 1,
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """``stream_two_level`` for frequencies: per-micro-batch count-min
     cell partials (operators/sketches.py::cms_partials, batch id as the
@@ -333,17 +334,10 @@ def stream_cms_rollup(
             epoch,
         )
 
-    q = (
+    drain(
         sdf.writeStream.foreachBatch(_emit)
         .option("checkpointLocation", exchange_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive
-            q.stop()
     return SK.cms_merge(_read_batch_keyed(spark, exchange_dir))
 
 
@@ -356,7 +350,6 @@ def stream_topk_rollup(
     max_items_tracked: int = 4096,
     ts_col: str = "ts",
     max_files_per_trigger: int | None = 1,
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """``stream_two_level`` for heavy hitters: per-micro-batch
     ``approx_top_k_accumulate`` states (operators/sketches.py::
@@ -382,17 +375,10 @@ def stream_topk_rollup(
             epoch,
         )
 
-    q = (
+    drain(
         sdf.writeStream.foreachBatch(_emit)
         .option("checkpointLocation", exchange_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive
-            q.stop()
     return SK.merge_topk_partials(
         _read_batch_keyed(spark, exchange_dir),
         k=k,
@@ -408,7 +394,6 @@ def stream_segment_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_files_per_trigger: int | None = 1,
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Segment-level dedup deployed as a stream: first-SEEN occurrence of
     each chunk survives, across all batches.
@@ -438,17 +423,10 @@ def stream_segment_dedup(
             chunk_words=chunk_words, text_col=text_col, id_col=id_col,
         )
 
-    q = (
+    drain(
         sdf.writeStream.foreachBatch(_emit)
         .option("checkpointLocation", work_dir + "/_ckpt")
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive
-            q.stop()
     return _read_batch_keyed(spark, out_dir)
 
 
@@ -627,7 +605,6 @@ def stream_neardup_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_files_per_trigger: int | None = 1,
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Incremental near-dup curation deployed as a stream.
 
@@ -715,17 +692,10 @@ def stream_neardup_index(
         inc_bands.unpersist()
         batch_df.unpersist()
 
-    q = (
+    drain(
         sdf.writeStream.foreachBatch(_process)
         .option("checkpointLocation", os.path.join(work_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive
-            q.stop()
     return _read_batch_keyed(spark, pairs_dir)
 
 
@@ -740,7 +710,6 @@ def stream_ann_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_files_per_trigger: int | None = 1,
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Incremental IVF-PQ index maintenance deployed as a stream.
 
@@ -784,17 +753,10 @@ def stream_ann_index(
         )
         batch_df.unpersist()
 
-    q = (
+    drain(
         sdf.writeStream.foreachBatch(_process)
         .option("checkpointLocation", os.path.join(work_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive
-            q.stop()
     return _read_batch_keyed(spark, index_dir)
 
 
@@ -889,7 +851,6 @@ def stream_classifier_gate(
     vocab_size: int = 2048,
     min_margin: float | None = None,
     max_files_per_trigger: int | None = 1,
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """The model-based curation gate deployed as a stream.
 
@@ -975,17 +936,10 @@ def stream_classifier_gate(
         routed.unpersist()
         batch_df.unpersist()
 
-    q = (
+    drain(
         sdf.writeStream.foreachBatch(_process)
         .option("checkpointLocation", os.path.join(work_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive
-            q.stop()
     return _read_batch_keyed(spark, accepted_dir)
 
 
@@ -1046,7 +1000,6 @@ def stream_gated_ingest(
     expectations: list[dict],
     refs: dict[str, DataFrame] | None = None,
     max_files_per_trigger: int | None = 1,
-    timeout_sec: int = 300,
 ) -> tuple[DataFrame, DataFrame]:
     """Contract-gated ingestion: each micro-batch is admitted ONLY if it
     passes every data-quality expectation; failing batches land in
@@ -1095,17 +1048,10 @@ def stream_gated_ingest(
         report.unpersist()
         batch_df.unpersist()
 
-    q = (
+    drain(
         sdf.writeStream.foreachBatch(_process)
         .option("checkpointLocation", os.path.join(work_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive
-            q.stop()
     return (
         _read_batch_keyed(spark, accepted_dir),
         _read_batch_keyed(spark, reports_dir),
@@ -1124,7 +1070,6 @@ def stream_curate(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_files_per_trigger: int | None = 1,
-    timeout_sec: int = 600,
 ) -> DataFrame:
     """The curation capstone deployed as ONE stream (VERDICT r4 item 6):
     quality gate → language filter → exact dedup → near-dup band-index
@@ -1164,17 +1109,10 @@ def stream_curate(
             languages=languages, text_col=text_col, id_col=id_col,
         )
 
-    q = (
+    drain(
         sdf.writeStream.foreachBatch(_process)
         .option("checkpointLocation", os.path.join(work_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive
-            q.stop()
 
     docs = _read_batch_keyed(spark, os.path.join(work_dir, "docs"))
     pairs = _read_batch_keyed(spark, os.path.join(work_dir, "pairs")).select(
@@ -1329,7 +1267,6 @@ def stream_drift_monitor(
     bins: int = 10,
     threshold: float = 0.2,
     max_files_per_trigger: int | None = 1,
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Streaming distribution-drift monitor: every micro-batch is scored
     against a frozen reference slice with the batch PSI operator
@@ -1370,17 +1307,12 @@ def stream_drift_monitor(
             epoch,
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", os.path.join(work_dir, "_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        q.awaitTermination(timeout_sec)
+        drain(
+            sdf.writeStream.foreachBatch(_process)
+            .option("checkpointLocation", os.path.join(work_dir, "_ckpt"))
+        )
     finally:
-        if q.isActive:  # pragma: no cover - defensive
-            q.stop()
         ref.unpersist()
     return _read_batch_keyed(spark, reports_dir)
 
@@ -1420,7 +1352,6 @@ def run_dedup_counter_once(
     spec: CounterSpec,
     id_cols: Sequence[str] = ("event_id",),
     ts_col: str = "ts",
-    timeout_sec: int = 300,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Dedup → counter over a bounded path (test/driver harness).
@@ -1434,18 +1365,11 @@ def run_dedup_counter_once(
     )
     out = build_counter(deduped, spec, ts_col=ts_col)
     name = f"dedup_counter_{uuid.uuid4().hex[:12]}"
-    q = (
+    drain(
         out.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive
-            q.stop()
     return spark.table(name)
 
 
@@ -1554,7 +1478,6 @@ def run_sessionize_stream_once(
     gap: str = "30 minutes",
     ts_col: str = "ts",
     key_col: str = "user_id",
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Drain a bounded path through the streaming sessionizer (test/driver
     harness; complete output mode emits every session like the batch op —
@@ -1565,16 +1488,9 @@ def run_sessionize_stream_once(
         _read_stream(spark, path, ts_col), key_col=key_col, ts_col=ts_col, gap=gap
     )
     name = f"sessionize_stream_{uuid.uuid4().hex[:12]}"
-    q = (
+    drain(
         out.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive
-            q.stop()
     return spark.table(name)

@@ -76,7 +76,6 @@ def run_stateful_counts_once(
     path: str,
     key_col: str = "user_id",
     ts_col: str = "ts",
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Drive the stateful operator over a bounded path; return final counts.
 
@@ -88,23 +87,12 @@ def run_stateful_counts_once(
     """
     from pyspark.sql import functions as F
 
-    from kinesis_data_counter_spark.streaming.runner import _read_stream
+    from kinesis_data_counter_spark.streaming.runner import _read_stream, drain
 
     sdf = _read_stream(spark, path, ts_col)
     out = stateful_running_counts(sdf, key_col)
     name = f"stateful_counts_{uuid.uuid4().hex[:12]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:  # pragma: no cover - defensive
-            q.stop()
+    drain(out.writeStream.format("memory").queryName(name).outputMode("update"))
     return (
         spark.table(name)
         .groupBy("key")

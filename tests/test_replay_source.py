@@ -13,6 +13,7 @@ from kinesis_data_counter_spark.sources.replay_source import (
     KinesisReplayDataSource,
     write_shard_files,
 )
+from kinesis_data_counter_spark.streaming.runner import drain
 
 
 @pytest.fixture()
@@ -61,15 +62,12 @@ def test_stream_trim_horizon_drains_then_tails_appends(spark, shard_dir, tmp_pat
     def run_once():
         # foreachBatch (not the memory sink) so the checkpoint is recoverable
         # across restarts — the cross-run offset continuity IS the test
-        q = (
+        drain(
             sdf.writeStream.foreachBatch(
                 lambda b, _e: seen.extend(b.collect())
             )
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(120)
 
     run_once()
     assert len(seen) == 30  # trim_horizon replays everything
@@ -95,15 +93,12 @@ def test_stream_latest_skips_history(spark, shard_dir, tmp_path):
         .option("startingPosition", "latest")
         .load()
     )
-    q = (
+    drain(
         sdf.writeStream.format("memory")
         .queryName("replay_latest")
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
     assert spark.table("replay_latest").count() == 0
 
 
@@ -160,15 +155,12 @@ def test_stream_writer_roundtrip_counter_results(spark, shard_dir, tmp_path):
             ).alias("data"),
         )
     )
-    q = (
+    drain(
         src.writeStream.format("kinesis_replay")
         .option("path", out)
         .option("numShards", "2")
         .option("checkpointLocation", str(tmp_path / "ckpt_w"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
     back = spark.read.format("kinesis_replay").option("path", out).load()
     assert back.count() == 30
     assert {os.path.basename(p) for p in os.listdir(out) if p.startswith("shard-")} == {
@@ -253,7 +245,7 @@ def test_watermark_append_semantics_on_replay_stream(spark, tmp_path):
 
     emitted: list = []
 
-    def drain():
+    def run_once():
         src = spark.readStream.format("kinesis_replay").option("path", d).load()
         agg = (
             src.withWatermark("approximate_arrival", "0 seconds")
@@ -261,21 +253,18 @@ def test_watermark_append_semantics_on_replay_stream(spark, tmp_path):
             .count()
             .select(F.unix_millis("w.start").alias("ws"), "count")
         )
-        q = (
+        drain(
             agg.writeStream.foreachBatch(lambda b, _e: emitted.extend(b.collect()))
             .outputMode("append")
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(120)
 
     put("2024-01-01 10:00:00"); put("2024-01-01 11:30:00")
-    drain()
+    run_once()
     put("2024-01-01 12:30:00")
-    drain()                      # watermark 11:30 → closes the 10:00 window
+    run_once()                   # watermark 11:30 → closes the 10:00 window
     put("2024-01-01 10:15:00")   # 2h+ late
-    drain()                      # watermark 12:30 → late row dropped
+    run_once()                   # watermark 12:30 → late row dropped
 
     counts = {r.ws: r["count"] for r in emitted}
     h10 = int(dt.datetime(2024, 1, 1, 10, tzinfo=dt.timezone.utc).timestamp() * 1000)

@@ -13,7 +13,7 @@ from kinesis_data_counter_spark.config import CounterSpec
 from kinesis_data_counter_spark.operators.counter import build_counter
 from kinesis_data_counter_spark.session import load_tables
 from kinesis_data_counter_spark.sources import parse_json_records, split_corrupt_records
-from kinesis_data_counter_spark.streaming.runner import run_counter_stream_once
+from kinesis_data_counter_spark.streaming.runner import drain, run_counter_stream_once
 from kinesis_data_counter_spark.streaming.sinks import console_writer, writer_for_arn
 
 ARN = "arn:aws:kinesis:us-east-1:111122223333:stream/events"
@@ -312,14 +312,11 @@ def test_append_mode_drops_late_data(spark, tmp_path):
         .count()
     )
     name = f"late_{uuid.uuid4().hex[:8]}"
-    q = (
+    drain(
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
     got = {
         (str(r.window.start), str(r.window.end)): r["count"]
         for r in spark.table(name).collect()
@@ -358,15 +355,12 @@ def test_checkpoint_restart_processes_each_file_once(spark, tmp_path):
             .parquet(str(src) + "/*")
             .withColumn("doubled", F.col("v") * 2)
         )
-        q = (
+        drain(
             sdf.writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(120)
 
     add_file("b1", 0, 100)
     run_once()
@@ -511,14 +505,11 @@ def test_stream_stream_interval_join_equals_batch(spark, sf_dir):
 
     out = stream_stream_interval_join(spark, f"{sf_dir}/events.parquet")
     name = f"ssj_{uuid.uuid4().hex[:8]}"
-    q = (
+    drain(
         out.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(180)
     streamed = {
         (r.l_id, r.r_id) for r in spark.table(name).collect()
     }
@@ -554,14 +545,11 @@ def test_stream_static_enrichment_equals_batch(spark, sf_dir):
     out = stream_enrich(spark, f"{sf_dir}/events.parquet", dim, on=("user_id",))
     agg = out.groupBy("segment").count()
     name = f"enrich_{uuid.uuid4().hex[:8]}"
-    q = (
+    drain(
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
     streamed = {(r.segment, r["count"]) for r in spark.table(name).collect()}
 
     ev = load_tables(spark, sf_dir, ("events",))["events"]
@@ -1324,3 +1312,76 @@ def test_stream_classifier_gate_null_margin_routes_to_rejected(spark, tmp_path):
     assert accepted.count() + rejected.count() == 3, "no doc may vanish"
     rej = {r.doc_id: r for r in rejected.collect()}
     assert 10 in rej and rej[10].margin is None
+
+
+def test_drain_raises_on_failure_and_timeout(spark, tmp_path, monkeypatch):
+    # a failing batch and a drain that outlives its deadline must both
+    # raise — never hand partial tables to the caller as a finished drain —
+    # and both must leave no query running and the session usable
+    import time
+
+    from pyspark.errors import StreamingQueryException
+
+    src = str(tmp_path / "src")
+    for i in range(4):
+        spark.range(10 * i, 10 * i + 10).coalesce(1).write.mode("append").parquet(src)
+
+    def writer(fn):
+        sdf = (
+            spark.readStream.schema("id long")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        return sdf.writeStream.foreachBatch(fn)
+
+    def boom(batch_df, epoch):
+        raise ValueError(f"batch {epoch} failed")
+
+    with pytest.raises(StreamingQueryException, match="batch 0 failed"):
+        drain(writer(boom))
+    assert not spark.streams.active
+
+    seen: list = []
+
+    def slow(batch_df, epoch):
+        seen.append(epoch)
+        time.sleep(2)
+
+    monkeypatch.setattr(
+        "kinesis_data_counter_spark.streaming.runner._DRAIN_TIMEOUT_S", 1
+    )
+    with pytest.raises(TimeoutError):
+        drain(writer(slow))
+    assert not spark.streams.active
+    assert 0 < len(seen) < 4  # stopped mid-drain
+    monkeypatch.undo()
+
+    rows: list = []
+    q = drain(writer(lambda b, _e: rows.extend(b.collect())))
+    assert not q.isActive and not spark.streams.active
+    assert sorted(r.id for r in rows) == list(range(40))
+    assert [p.batchId for p in q.recentProgress] == [0, 1, 2, 3]
+
+
+def test_await_termination_lives_only_in_drain():
+    # every bounded streaming run goes through runner.drain; a hand-written
+    # start/wait/stop copy would bring back the unchecked-timeout bug
+    import inspect
+    from pathlib import Path
+
+    def span(fn):
+        lines, start = inspect.getsourcelines(fn)
+        return Path(inspect.getsourcefile(fn)).resolve(), range(start, start + len(lines))
+
+    allowed = [span(drain), span(test_await_termination_lives_only_in_drain)]
+    repo = Path(__file__).resolve().parent.parent
+    stray = [
+        f"{path.relative_to(repo)}:{no}"
+        for sub in ("kinesis_data_counter_spark", "tests", "examples")
+        for path in sorted((repo / sub).rglob("*.py"))
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if "awaitTermination(" in line
+        and not any(path == f and no in r for f, r in allowed)
+    ]
+    assert "awaitTermination(" in inspect.getsource(drain)
+    assert not stray, stray
