@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from kinesis_data_counter_spark.config import DEFAULT_RSD, CounterSpec  # noqa: E402
+from kinesis_data_counter_spark.config import CounterSpec  # noqa: E402
 from kinesis_data_counter_spark.operators.counter import build_counter  # noqa: E402
 from kinesis_data_counter_spark.plans.registry import QUERIES, oracle_sql_map  # noqa: E402
 from kinesis_data_counter_spark.session import load_tables  # noqa: E402
@@ -33,7 +33,6 @@ def entry(spark: SparkSession) -> DataFrame:
         counter_type="approx_count_distinct",
         target_column="user_id",
         window="1 hour",
-        rsd=DEFAULT_RSD,
         input_stream_arn="arn:aws:kinesis:us-east-1:111122223333:stream/events",
     ).validate()
     return build_counter(tables["events"], spec, ts_col="ts")

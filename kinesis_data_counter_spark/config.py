@@ -31,11 +31,6 @@ COUNT = "count"
 APPROX_COUNT_DISTINCT = "approx_count_distinct"
 COUNTER_TYPES = (COUNT, APPROX_COUNT_DISTINCT)
 
-# HLL++ precision the reference hard-codes (counter.go:206-208): p=16.
-# Spark's approx_count_distinct rsd ≈ 1.04 / sqrt(2^p) → p=16 ⇒ rsd≈0.0041.
-DEFAULT_HLL_PRECISION = 16
-DEFAULT_RSD = 1.04 / (2**DEFAULT_HLL_PRECISION) ** 0.5
-
 _ENV_RX = re.compile(r"\$\{(?P<braced>[A-Za-z_][A-Za-z0-9_]*)\}|\$(?P<plain>[A-Za-z_][A-Za-z0-9_]*)")
 
 
@@ -55,7 +50,11 @@ def interpolate_env(text: str, env: dict[str, str] | None = None) -> str:
 
 @dataclass
 class CounterSpec:
-    """One standing query ≈ reference CounterConfig (config.go:25-38)."""
+    """One standing query ≈ reference CounterConfig (config.go:25-38).
+
+    The reference's SipHash key has no counterpart: the HLL sketch hashes
+    with Datasketches' own seed, and ``from_dict`` ignores the key.
+    """
 
     id: str
     counter_type: str = COUNT
@@ -65,11 +64,8 @@ class CounterSpec:
     target_column: str | None = None
     target_expr: str | None = None
     jq_expr: str | None = None
-    siphash_key_hex: str | None = None
-    # engine extensions (the reference fixes these in code / CLI flags):
+    # engine extension (the reference fixes it by CLI flag):
     window: str = "1 minute"  # tumbling window size (run.go:148-159)
-    rsd: float = DEFAULT_RSD  # HLL++ relative std dev (counter.go:206-208)
-    hll_precision: int = DEFAULT_HLL_PRECISION
 
     # populated by validate():
     _input_arn: Arn | None = field(default=None, repr=False, compare=False)
@@ -111,8 +107,6 @@ class CounterSpec:
         for a in (self.output_stream_arn, self.aggregate_stream_arn):
             if a:
                 Arn.parse_strict(a)
-        if self.hll_precision < 4 or self.hll_precision > 21:
-            raise ConfigError(f"counter {self.id}: hll_precision out of range")
         return self
 
     @property
@@ -228,10 +222,7 @@ class Config:
                 target_column=c.get("target_column"),
                 target_expr=(c.get("target_expr") or None),
                 jq_expr=(c.get("jq_expr") or None),
-                siphash_key_hex=c.get("siphash_key_hex"),
                 window=c.get("window", "1 minute"),
-                rsd=float(c.get("rsd", DEFAULT_RSD)),
-                hll_precision=int(c.get("hll_precision", DEFAULT_HLL_PRECISION)),
             )
             for c in data.get("counters", [])
         ]

@@ -1,9 +1,10 @@
 from kinesis_data_counter_spark.operators.counter import (
     assemble_counters,
     build_counter,
-    counter_value_column,
-    finalize_counter,
+    counter_state,
+    finalize_state,
     merge_partials,
+    merge_state,
     partial_counter,
     union_counter_results,
 )
@@ -17,9 +18,10 @@ from kinesis_data_counter_spark.operators.windows import (
 __all__ = [
     "assemble_counters",
     "build_counter",
-    "counter_value_column",
-    "finalize_counter",
+    "counter_state",
+    "finalize_state",
     "merge_partials",
+    "merge_state",
     "partial_counter",
     "union_counter_results",
     "asof_join",

@@ -24,9 +24,9 @@ Scale notes:
 - count/approx_count_distinct both do map-side partial aggregation, so the
   shuffle carries one row per (group × partition), not per input record —
   at 100 TB the exchange volume is proportional to cardinality, not data.
-- HLL++ precision 16 (counter.go:206-208) ⇒ 64 KB dense sketch worst-case
-  per group per partition in the partial stage; fine for thousands of
-  windows, tune ``rsd`` down if grouping by high-cardinality keys.
+- HLL precision ``HLL_LG_K = 16`` (counter.go:206-208) ⇒ 64 KB dense
+  sketch worst-case per group per partition in the partial stage; fine for
+  thousands of windows, costly when grouping by high-cardinality keys.
 - No Python in the hot path: everything compiles to built-in Catalyst
   expressions inside whole-stage codegen.
 """
@@ -46,8 +46,16 @@ from kinesis_data_counter_spark.expr import compile_target_expr
 from kinesis_data_counter_spark.jq import apply_jq
 
 
-def _target_column(df: DataFrame, spec: CounterSpec) -> tuple[Column, bool]:
-    """The projected target value column and whether it is BOOLEAN-typed.
+# HLL precision the reference hard-codes (counter.go:206-208): lgK = 16.
+HLL_LG_K = 16
+
+# The only input types ``hll_sketch_agg`` takes; any other target is
+# hashed by its STRING form.
+_SKETCHABLE = (T.IntegerType, T.LongType, T.StringType, T.BinaryType)
+
+
+def _target_column(df: DataFrame, spec: CounterSpec) -> tuple[Column, T.DataType]:
+    """The projected target value column and its resolved type.
 
     Count-mode semantics (SURVEY.md §2.6.1, counter.go:260-277): a record
     counts unless the target evaluates to nil — or, for boolean expressions,
@@ -60,34 +68,52 @@ def _target_column(df: DataFrame, spec: CounterSpec) -> tuple[Column, bool]:
     else:
         assert spec.target_column and spec.target_column != "*"
         col = F.col(spec.target_column)
-    dtype = df.select(col.alias("__t")).schema[0].dataType
-    return col, isinstance(dtype, T.BooleanType)
+    return col, df.select(col.alias("__t")).schema[0].dataType
 
 
-def counter_value_column(df: DataFrame, spec: CounterSpec) -> Column:
-    """The aggregate expression for one counter (operators A1/A3)."""
+# ---------------------------------------------------------------------------
+# The counter-state algebra ≈ CounterState{RowCount, Base64HLLPP}
+# (counter.go:78-84): a per-group state, a merge of states, a final value.
+# Every counter path — single-level, two-level, Lambda handler — is these.
+# ---------------------------------------------------------------------------
+
+def counter_state(df: DataFrame, spec: CounterSpec) -> Column:
+    """The per-group state aggregate of one counter over ``df``.
+
+    A count counter's state is a LONG partial count (operator A1); a
+    distinct counter's is a Datasketches HLL sketch BINARY (A3), mergeable
+    across partitions, micro-batches, shards and invocations.
+    """
     if spec.counter_type == COUNT:
         if spec.target_column == "*":
             return F.count(F.lit(1))  # F1: count-all
-        col, is_bool = _target_column(df, spec)
-        if is_bool:
+        col, dtype = _target_column(df, spec)
+        if isinstance(dtype, T.BooleanType):
             # nil/false rule: false and NULL excluded → count_if
             return F.count_if(col)
         # any non-null value counts (incl. 0, "", false-y non-booleans)
         return F.count(col)
     if spec.counter_type == APPROX_COUNT_DISTINCT:
-        col, _ = _target_column(df, spec)
-        # HLL at the reference's precision (counter.go:206-208, p=16 ⇒
-        # rsd≈0.0041). Implementation choice, benchmarked: Datasketches
-        # hll_sketch_agg keeps a SPARSE buffer until per-group cardinality
-        # grows, while approx_count_distinct at this rsd allocates a dense
-        # ~87 KB HLL++ buffer per (group × partition) — 100× slower on
-        # high-group-count windows locally, and a partial-agg shuffle
-        # amplifier at 100 TB. Estimates agree with exact counts only
-        # within ε, mirrored by the reference's own ε≤0.05 oracle
-        # (counter_test.go:66).
-        return F.hll_sketch_estimate(F.hll_sketch_agg(col, F.lit(spec.hll_precision)))
+        col, dtype = _target_column(df, spec)
+        if not isinstance(dtype, _SKETCHABLE):
+            col = col.cast("string")  # NULL stays NULL (skipped), false counts
+        # Benchmarked: Datasketches keeps a SPARSE buffer until per-group
+        # cardinality grows, while approx_count_distinct at p=16 allocates
+        # a dense ~87 KB HLL++ buffer per (group × partition) — 100× slower
+        # on high-group-count windows. Estimates are within the reference's
+        # own ε≤0.05 oracle (counter_test.go:66).
+        return F.hll_sketch_agg(col, F.lit(HLL_LG_K))
     raise ValueError(f"unknown counter_type {spec.counter_type!r}")
+
+
+def merge_state(spec: CounterSpec, state: Column) -> Column:
+    """The aggregate merging many states of ``spec`` into one."""
+    return F.sum(state) if spec.counter_type == COUNT else F.hll_union_agg(state)
+
+
+def finalize_state(spec: CounterSpec, state: Column) -> Column:
+    """A state's counter value: the count itself, or the HLL estimate."""
+    return state if spec.counter_type == COUNT else F.hll_sketch_estimate(state)
 
 
 def tumbling_window(ts_col: str | Column, size: str) -> Column:
@@ -126,7 +152,8 @@ def _counter_frames(
         if shard_col:
             keys.append(F.col(shard_col).alias("__shard_id"))
         agg = df.groupBy(*keys).agg(
-            *[counter_value_column(df, s).alias(f"__v{i}") for i, s in enumerate(group)]
+            *[finalize_state(s, counter_state(df, s)).alias(f"__v{i}")
+              for i, s in enumerate(group)]
         )
         if len(group) > 1:
             agg = agg.localCheckpoint()
@@ -141,10 +168,7 @@ def _counter_frames(
             if shard_col:
                 cols.append(F.col("__shard_id").cast("string").alias("shard_id"))
             cols.append(F.col(f"__v{i}").cast("long").alias("value"))
-            res = agg.select(*cols)
-            if spec.jq_expr:
-                res = apply_jq(res, spec.jq_expr)  # F8: jq-subset → projection
-            out[spec.id] = res
+            out[spec.id] = apply_jq(agg.select(*cols), spec.jq_expr)  # F8
     return out
 
 
@@ -197,18 +221,8 @@ def partial_counter(
     else:
         keys.append(F.lit("").alias("shard_id"))
 
-    if spec.counter_type == COUNT:
-        agg_cols = [
-            F.count(F.lit(1)) if spec.target_column == "*" else counter_value_column(df, spec)
-        ]
-        agg = df.groupBy(*keys).agg(agg_cols[0].cast("long").alias("row_count"))
-        agg = agg.withColumn("hll_sketch", F.lit(None).cast("binary"))
-    else:
-        col, _ = _target_column(df, spec)
-        agg = df.groupBy(*keys).agg(
-            F.hll_sketch_agg(col, F.lit(spec.hll_precision)).alias("hll_sketch")
-        )
-        agg = agg.withColumn("row_count", F.lit(None).cast("long"))
+    agg = df.groupBy(*keys).agg(counter_state(df, spec).alias("state"))
+    is_count = spec.counter_type == COUNT
 
     arn = event_source_arn or spec.input_stream_arn
     from kinesis_data_counter_spark import __version__
@@ -222,8 +236,8 @@ def partial_counter(
         # (counter.go:488, 499); consumers process mismatches but can audit
         F.lit(__version__).alias("counter_version"),
         F.col("window"),
-        F.col("row_count"),
-        F.col("hll_sketch"),
+        (F.col("state") if is_count else F.lit(None).cast("long")).alias("row_count"),
+        (F.lit(None).cast("binary") if is_count else F.col("state")).alias("hll_sketch"),
     )
 
 
@@ -232,17 +246,16 @@ def merge_partials(partials: DataFrame, spec: CounterSpec) -> DataFrame:
 
     ≈ aggregateProcess (counter.go:348-412): filter to this counter's rows
     (F7 — mismatched counter_id/type rows are dropped, counter.go:365-370),
-    then sum partial counts / union HLL sketches per window.
+    merge their states per window, finalize, and apply the jq output
+    transform like ``build_counter``.
     """
     mine = partials.filter(
         (F.col("counter_id") == spec.id)
         & (F.col("counter_type") == spec.counter_type)
     )
-    if spec.counter_type == COUNT:
-        value = F.sum("row_count")
-    else:
-        value = F.hll_sketch_estimate(F.hll_union_agg(F.col("hll_sketch")))
-    return (
+    state = F.col("row_count" if spec.counter_type == COUNT else "hll_sketch")
+    value = finalize_state(spec, merge_state(spec, state))
+    merged = (
         mine.groupBy("window")
         .agg(value.cast("long").alias("value"))
         .select(
@@ -253,11 +266,7 @@ def merge_partials(partials: DataFrame, spec: CounterSpec) -> DataFrame:
             F.col("value"),
         )
     )
-
-
-def finalize_counter(df: DataFrame, spec: CounterSpec) -> DataFrame:
-    """Apply the jq output transform to merged results (K-side shaping)."""
-    return apply_jq(df, spec.jq_expr)
+    return apply_jq(merged, spec.jq_expr)
 
 
 # ---------------------------------------------------------------------------

@@ -18,7 +18,8 @@ counting, HLL sketching, sketch union and estimate — runs in Spark, so
 ``target_expr`` semantics and sketch binary format are byte-identical to
 the batch and streaming paths. State carries either a partial row count or
 a base64 Datasketches HLL sketch ≈ ``CounterState{RowCount, Base64HLLPP}``
-(counter.go:78-82).
+(counter.go:78-82), built and finalized by the batch path's own
+``counter_state`` / ``finalize_state``.
 
 Cost: an invocation is too small for compute to matter; its latency is
 jobs × the per-job floor. An input invoke runs exactly ONE job and no
@@ -40,13 +41,9 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_data_counter_spark.config import (
-    APPROX_COUNT_DISTINCT,
-    COUNT,
-    Config,
-    CounterSpec,
-)
+from kinesis_data_counter_spark.config import COUNT, Config, CounterSpec
 from kinesis_data_counter_spark.jq import eval_jq_object
+from kinesis_data_counter_spark.operators.counter import counter_state, finalize_state
 
 
 @dataclass
@@ -119,26 +116,6 @@ def _hll_union(sketches: list[bytes], new: Column | None = None) -> Column:
     """Carried sketch literals unioned, with ``new`` (a sketch aggregate)."""
     parts = [F.lit(s) for s in sketches] + ([new] if new is not None else [])
     return functools.reduce(F.hll_union, parts)
-
-
-def _counter_agg_column(df: DataFrame, spec: CounterSpec) -> Column:
-    """The partial-aggregate expression for one counter over parsed records.
-
-    Same type-directed nil/false rule as the batch path (SURVEY.md §2.6.1),
-    resolved against the event batch's inferred schema; the distinct path
-    produces a mergeable SKETCH (the state row), not an estimate.
-    """
-    from kinesis_data_counter_spark.operators.counter import _target_column
-
-    if spec.counter_type == COUNT:
-        if spec.target_column == "*":
-            return F.count(F.lit(1))
-        col, is_bool = _target_column(df, spec)
-        return F.count_if(col) if is_bool else F.count(col)
-    if spec.counter_type == APPROX_COUNT_DISTINCT:
-        col, _ = _target_column(df, spec)
-        return F.hll_sketch_agg(col, F.lit(spec.hll_precision))
-    raise ValueError(spec.counter_type)
 
 
 def _state_for(state: dict, spec: CounterSpec, shard_id: str) -> dict[str, Any]:
@@ -250,7 +227,7 @@ def _process_input(
     # (with no decodable record, a carried estimate is a literal fold)
     cols: dict[str, Column] = {"n": F.count(F.lit(1))} if clean else {}
     for i, spec in enumerate(counters):
-        new = _counter_agg_column(frame, spec) if clean else None
+        new = counter_state(frame, spec) if clean else None
         if spec.counter_type == COUNT:
             if new is not None:
                 cols[f"c{i}"] = new
@@ -262,7 +239,7 @@ def _process_input(
         if new is not None:
             cols[f"c{i}"] = sketch
         if event.is_final_invoke_for_window and not spec.aggregate_stream_arn:
-            cols[f"v{i}"] = F.hll_sketch_estimate(sketch)
+            cols[f"v{i}"] = finalize_state(spec, sketch)
     vals = _one_row(spark, cols, frame)
     if clean and vals["n"] != len(clean):
         raise ValueError(
@@ -302,7 +279,7 @@ def _process_aggregate(
         elif sketches:
             vals[f"c{i}"] = sketches[0]
         if event.is_final_invoke_for_window and sketches:
-            cols[f"v{i}"] = F.hll_sketch_estimate(_hll_union(sketches))
+            cols[f"v{i}"] = finalize_state(spec, _hll_union(sketches))
     vals.update(_one_row(spark, cols))
     _settle(counters, vals, event, "", resp, level2=True)
 

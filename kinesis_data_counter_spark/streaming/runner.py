@@ -20,7 +20,8 @@ Beyond the counter core, the streamed-operator inventory (each the
 micro-batch deployment of an oracled batch operator, every write
 batch-keyed for crash-replay idempotence): ``stream_two_level`` /
 ``stream_quantile_rollup`` / ``stream_cms_rollup`` / ``stream_topk_rollup``
-(mergeable-sketch exchanges across a job/storage boundary),
+(mergeable-sketch exchanges across a job/storage boundary, sharing one
+level 1, ``_exchange_rollup``),
 ``stream_segment_dedup`` (first-seen chunk survival against a persisted
 hash index), ``stream_neardup_index`` (MinHash band-index probe-and-append),
 ``stream_ann_index`` + ``ann_index_probe`` (frozen-model IVF-PQ index
@@ -41,7 +42,7 @@ from __future__ import annotations
 
 import os
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -214,6 +215,30 @@ def run_counter_stream_update_once(
     )
 
 
+def _exchange_rollup(
+    spark: SparkSession,
+    path: str,
+    exchange_dir: str,
+    partials: Callable[[DataFrame, int], DataFrame],
+    ts_col: str,
+    max_files_per_trigger: int | None,
+) -> DataFrame:
+    """Level 1 of every sketch exchange: drain the stream over ``path``,
+    appending each micro-batch's ``partials(batch_df, epoch)`` batch-keyed
+    to ``exchange_dir`` (replays overwrite, not duplicate), and return the
+    whole exchange for the caller's level-2 merge."""
+    sdf = _read_stream(spark, path, ts_col, max_files_per_trigger)
+
+    def _emit(batch_df: DataFrame, epoch: int) -> None:
+        _write_batch_keyed(partials(batch_df, epoch), exchange_dir, epoch)
+
+    drain(
+        sdf.writeStream.foreachBatch(_emit)
+        .option("checkpointLocation", exchange_dir + "_ckpt")
+    )
+    return _read_batch_keyed(spark, exchange_dir)
+
+
 def stream_two_level(
     spark: SparkSession,
     path: str,
@@ -239,20 +264,12 @@ def stream_two_level(
     micro-batches) bounded sketch/count rows, never raw records, so the
     hand-off stream stays tiny regardless of input volume.
     """
-    sdf = _read_stream(spark, path, ts_col, max_files_per_trigger)
-
-    def _emit(batch_df: DataFrame, epoch: int) -> None:
-        _write_batch_keyed(
-            partial_counter(batch_df, spec, ts_col=ts_col, shard_col=shard_col),
-            exchange_dir,
-            epoch,
-        )
-
-    drain(
-        sdf.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", exchange_dir + "_ckpt")
+    exchange = _exchange_rollup(
+        spark, path, exchange_dir,
+        lambda b, _: partial_counter(b, spec, ts_col=ts_col, shard_col=shard_col),
+        ts_col, max_files_per_trigger,
     )
-    return merge_partials(_read_batch_keyed(spark, exchange_dir), spec)
+    return merge_partials(exchange, spec)
 
 
 def stream_quantile_rollup(
@@ -279,24 +296,13 @@ def stream_quantile_rollup(
     """
     from kinesis_data_counter_spark.operators import sketches as SK
 
-    sdf = _read_stream(spark, path, ts_col, max_files_per_trigger)
-
-    def _emit(batch_df: DataFrame, epoch: int) -> None:
-        _write_batch_keyed(
-            SK.quantile_partials(
-                batch_df, value_col, group_col=group_col, shard_col=shard_col, k=k
-            ),
-            exchange_dir,
-            epoch,
-        )
-
-    drain(
-        sdf.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", exchange_dir + "_ckpt")
+    exchange = _exchange_rollup(
+        spark, path, exchange_dir,
+        lambda b, _: SK.quantile_partials(
+            b, value_col, group_col=group_col, shard_col=shard_col, k=k),
+        ts_col, max_files_per_trigger,
     )
-    return SK.merge_quantile_partials(
-        _read_batch_keyed(spark, exchange_dir), quantiles=quantiles, k=k
-    )
+    return SK.merge_quantile_partials(exchange, quantiles=quantiles, k=k)
 
 
 def stream_cms_rollup(
@@ -322,23 +328,14 @@ def stream_cms_rollup(
     """
     from kinesis_data_counter_spark.operators import sketches as SK
 
-    sdf = _read_stream(spark, path, ts_col, max_files_per_trigger)
-
-    def _emit(batch_df: DataFrame, epoch: int) -> None:
-        _write_batch_keyed(
-            SK.cms_partials(
-                batch_df, item_col, depth=depth, hex_chars=hex_chars,
-                shard_col=F.lit(str(epoch)),
-            ),
-            exchange_dir,
-            epoch,
-        )
-
-    drain(
-        sdf.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", exchange_dir + "_ckpt")
+    exchange = _exchange_rollup(
+        spark, path, exchange_dir,
+        lambda b, epoch: SK.cms_partials(
+            b, item_col, depth=depth, hex_chars=hex_chars,
+            shard_col=F.lit(str(epoch))),
+        ts_col, max_files_per_trigger,
     )
-    return SK.cms_merge(_read_batch_keyed(spark, exchange_dir))
+    return SK.cms_merge(exchange)
 
 
 def stream_topk_rollup(
@@ -363,27 +360,15 @@ def stream_topk_rollup(
     """
     from kinesis_data_counter_spark.operators import sketches as SK
 
-    sdf = _read_stream(spark, path, ts_col, max_files_per_trigger)
-
-    def _emit(batch_df: DataFrame, epoch: int) -> None:
-        _write_batch_keyed(
-            SK.topk_partials(
-                batch_df, item_col, max_items_tracked=max_items_tracked,
-                shard_col=F.lit(str(epoch)),
-            ),
-            exchange_dir,
-            epoch,
-        )
-
-    drain(
-        sdf.writeStream.foreachBatch(_emit)
-        .option("checkpointLocation", exchange_dir + "_ckpt")
+    exchange = _exchange_rollup(
+        spark, path, exchange_dir,
+        lambda b, epoch: SK.topk_partials(
+            b, item_col, max_items_tracked=max_items_tracked,
+            shard_col=F.lit(str(epoch))),
+        ts_col, max_files_per_trigger,
     )
     return SK.merge_topk_partials(
-        _read_batch_keyed(spark, exchange_dir),
-        k=k,
-        max_items_tracked=max_items_tracked,
-    )
+        exchange, k=k, max_items_tracked=max_items_tracked)
 
 
 def stream_segment_dedup(

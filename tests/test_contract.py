@@ -48,11 +48,12 @@ def test_coverage_doc_names_resolve():
         and not any(t in n or n in t for n in known)
         and t not in {
             # legitimate non-query identifiers mentioned in COVERAGE.md
-            "counter_value_column", "merge_partials", "partial_counter",
+            "counter_state", "merge_partials", "partial_counter",
             "build_counter", "union_counter_results", "assemble_counters",
-            "finalize_counter", "tumbling_window", "counter_test",
+            "tumbling_window", "counter_test",
             "stateful_running_counts", "write_curated", "upsert_partitions",
-            "hll_sketch_agg", "hll_union_agg", "approx_count_distinct",
+            "hll_sketch_agg", "hll_union_agg", "hll_sketch_estimate",
+            "approx_count_distinct",
             "arn_test", "session_window", "transformWithState",
             "applyInPandasWithState", "batchItemFailures", "config_pipeline",
             "quantile_partials", "merge_quantile_partials",

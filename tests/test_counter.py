@@ -10,6 +10,7 @@ expr-filtered distinct — the same ε the reference accepts
 
 from __future__ import annotations
 
+import base64
 import datetime as dt
 import json
 
@@ -266,3 +267,103 @@ def test_assemble_counters_matches_per_spec_build(spark, tmp_path, source, with_
     assert sum(r["value"] for r in rows if r.get("name") == "r") == 3000
     assert {r["window_start"] for r in rows if r["counter_id"] == "users"} == {
         r["window_start"] for r in rows if r["counter_id"] == "all"}
+
+
+# ---------------------------------------------------------------------------
+# the counter-state algebra: every path builds, merges and finalizes the
+# same state, whatever the target's type
+# ---------------------------------------------------------------------------
+
+def _typed_objs():
+    """Records over one window: a path that is set, unset or absent, and a
+    float amount (NULL every 7th record) with 40 distinct values."""
+    return [
+        {"path": ("/my_page", "/", None)[i % 3], "request_id": i,
+         "amount": None if i % 7 == 3 else (i % 40) / 4}
+        for i in range(300)
+    ]
+
+
+@pytest.mark.parametrize("ctype,target,exact", [
+    # boolean target_expr: {true, false}; NULL path → NULL, skipped
+    ("approx_count_distinct", {"target_expr": 'string_contains(path, "my_page")'}, 2),
+    # DOUBLE column: 40 distinct non-NULL values
+    ("approx_count_distinct", {"target_column": "amount"}, 40),
+    ("count", {"target_column": "amount"}, sum(i % 7 != 3 for i in range(300))),
+])
+def test_state_algebra_over_any_target_type(spark, ctype, target, exact):
+    """A counter over a BOOLEAN or DOUBLE target gives one value through
+    ``build_counter``, ``partial_counter`` → ``merge_partials`` over three
+    shards, and a single-shard final invoke of the Lambda handler."""
+    from kinesis_data_counter_spark.config import Config
+    from kinesis_data_counter_spark.streaming.handler import (
+        TimeWindowEvent,
+        handle_time_window_event,
+    )
+
+    objs = _typed_objs()
+    df = spark.createDataFrame(
+        [(WINDOW_START, o["path"], o["request_id"], o["amount"], o["request_id"] % 3)
+         for o in objs],
+        "time timestamp, path string, request_id long, amount double, shard int",
+    )
+    conf = {"id": "c", "counter_type": ctype, "input_stream_arn": ARN, **target}
+    spec = Config.from_dict({"counters": [conf]}).counters[0]
+
+    batch = build_counter(df, spec, ts_col="time").collect()
+    partials = partial_counter(df, spec, ts_col="time", shard_col="shard")
+    two_level = merge_partials(partials, spec).collect()
+    ws = int(WINDOW_START.timestamp() * 1000)
+    event = TimeWindowEvent(
+        records=[{"sequence_number": str(i), "data": base64.b64encode(
+            json.dumps({k: v for k, v in o.items() if v is not None}).encode()
+        ).decode()} for i, o in enumerate(objs)],
+        window_start_ms=ws, window_end_ms=ws + 60_000, event_source_arn=ARN,
+        shard_id="shard-0", is_final_invoke_for_window=True,
+    )
+    handled = handle_time_window_event(spark, Config(counters=[spec]), event)
+
+    assert [r.value for r in batch] == [r.value for r in two_level] == [
+        o["value"] for o in handled.outputs] == [exact]
+
+
+def test_two_level_applies_jq_like_build_counter(spark, tmp_path):
+    """``stream_two_level`` (``partial_counter`` → exchange →
+    ``merge_partials``) reshapes its rows with the spec's ``jq_expr``
+    exactly like ``build_counter``: same rows, same columns."""
+    from kinesis_data_counter_spark.streaming.runner import stream_two_level
+
+    df = access_log(spark, 50, 3000, shards=3).withColumn(
+        "time", F.col("time") + F.expr("make_interval(0, 0, 0, 0, 0, request_id % 7 % 4)"))
+    src = str(tmp_path / "log")
+    df.repartition(3).write.parquet(src)
+    spec = CounterSpec(
+        id="r", counter_type="count", target_column="*", input_stream_arn=ARN,
+        jq_expr='select(.value > 700) | {"time": .window_start, "name": "r", "value": .value}',
+    ).validate()
+    got = stream_two_level(spark, src, spec, str(tmp_path / "exchange"),
+                           ts_col="time", shard_col="shard")
+    want = build_counter(df, spec, ts_col="time")
+    assert got.columns == want.columns == ["time", "name", "value"]
+    rows = sorted(tuple(r) for r in want.collect())
+    assert sorted(tuple(r) for r in got.collect()) == rows and len(rows) == 3
+
+
+def test_state_rule_lives_only_in_the_counter_algebra():
+    """The count-vs-HLL state rule is written once, in
+    ``operators/counter.py``: the streaming layers and the CLI build,
+    merge and finalize counter state only through it."""
+    import pathlib
+
+    import kinesis_data_counter_spark as kdc
+
+    root = pathlib.Path(kdc.__file__).parent
+    spelled = {
+        f"{rel}: {tok}"
+        for rel in ("streaming/handler.py", "streaming/runner.py",
+                    "streaming/stateful.py", "__main__.py")
+        for tok in ("hll_sketch_agg(", "hll_sketch_estimate(", "hll_union_agg(",
+                    "count_if(")
+        if tok in (root / rel).read_text()
+    }
+    assert spelled == set()

@@ -336,3 +336,33 @@ def test_job_budget_per_invoke(spark, spark_jobs):
         spark, count_cfg, make_intermediate_event(lvl1.intermediate_records,
                                                   AGG_ARN, WS, WE)))
     assert not jobs and out.outputs[0]["value"] == 9
+
+
+def test_float_target_distinct_matches_batch_paths(spark):
+    # a distinct counter over {"amount": 0.5}-style floats: the handler's
+    # carried sketch over two invokes, build_counter and partial_counter →
+    # merge_partials over the same records all give one value
+    from pyspark.sql import functions as F
+
+    from kinesis_data_counter_spark.operators.counter import (
+        build_counter,
+        merge_partials,
+        partial_counter,
+    )
+
+    cfg = _cfg(id="amounts", counter_type="approx_count_distinct",
+               target_column="amount")
+    objs = [{"amount": (i % 30) / 2 + 0.5, "shard": i % 2} for i in range(150)]
+    r1 = handle_time_window_event(spark, cfg, _event(objs[:70]))
+    r2 = handle_time_window_event(
+        spark, cfg, _event(objs[70:], state=r1.state, final=True, seq0=70))
+
+    df = spark.read.json(
+        spark.sparkContext.parallelize([json.dumps(o) for o in objs], 1)
+    ).withColumn("ts", F.timestamp_millis(F.lit(WS)))
+    assert dict(df.dtypes)["amount"] == "double"
+    spec = cfg.counters[0]
+    batch = build_counter(df, spec).collect()
+    merged = merge_partials(partial_counter(df, spec, shard_col="shard"), spec).collect()
+    assert [o["value"] for o in r2.outputs] == [r.value for r in batch] == [
+        r.value for r in merged] == [30]
