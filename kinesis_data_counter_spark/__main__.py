@@ -23,16 +23,12 @@ import io
 import re
 import sys
 
-_GO_DURATION = re.compile(r"^(\d+)(s|m|h|d)$")
-_UNIT = {"s": "seconds", "m": "minutes", "h": "hours", "d": "days"}
-
-
-def parse_window(text: str) -> str:
-    """``1m``/``30s``/``2h`` → Spark interval string; pass through others."""
-    m = _GO_DURATION.match(text.strip())
-    if m:
-        return f"{m.group(1)} {_UNIT[m.group(2)]}"
-    return text
+from kinesis_data_counter_spark.config import (
+    Config,
+    ConfigError,
+    CounterSpec,
+    parse_window,
+)
 
 
 def window_minutes(window: str) -> float:
@@ -106,7 +102,6 @@ def main(argv: list[str] | None = None, out: io.TextIOBase | None = None) -> int
     args = parser.parse_args(argv)
     out = out or sys.stdout
 
-    from kinesis_data_counter_spark.config import Config, CounterSpec
     from kinesis_data_counter_spark.operators.counter import (
         assemble_counters,
         build_counter,
@@ -133,7 +128,6 @@ def main(argv: list[str] | None = None, out: io.TextIOBase | None = None) -> int
     arn = args.stream_arn
     if args.config:
         from kinesis_data_counter_spark import __version__
-        from kinesis_data_counter_spark.config import ConfigError
 
         cfg = Config.load(args.config)
         try:

@@ -31,11 +31,22 @@ COUNT = "count"
 APPROX_COUNT_DISTINCT = "approx_count_distinct"
 COUNTER_TYPES = (COUNT, APPROX_COUNT_DISTINCT)
 
+_GO_DURATION = re.compile(r"^(\d+)(s|m|h|d)$")
+_UNIT = {"s": "seconds", "m": "minutes", "h": "hours", "d": "days"}
+
 _ENV_RX = re.compile(r"\$\{(?P<braced>[A-Za-z_][A-Za-z0-9_]*)\}|\$(?P<plain>[A-Za-z_][A-Za-z0-9_]*)")
 
 
 class ConfigError(ValueError):
     """Invalid counter configuration."""
+
+
+def parse_window(text: str) -> str:
+    """``1m``/``30s``/``2h`` → Spark interval string; pass through others."""
+    m = _GO_DURATION.match(text.strip())
+    if m:
+        return f"{m.group(1)} {_UNIT[m.group(2)]}"
+    return text
 
 
 def interpolate_env(text: str, env: dict[str, str] | None = None) -> str:
@@ -73,6 +84,8 @@ class CounterSpec:
     def validate(self) -> "CounterSpec":
         if not self.id:
             raise ConfigError("counter id is required")
+        # the CLI's Go durations (``1m``) are valid in a config too
+        self.window = parse_window(self.window)
         if self.counter_type not in COUNTER_TYPES:
             raise ConfigError(
                 f"counter {self.id}: counter_type must be one of {COUNTER_TYPES}, "

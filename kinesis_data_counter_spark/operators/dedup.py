@@ -30,14 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kinesis_data_counter_spark.session import fan_out
-
-# connected_components collects pair graphs up to this many edges to the
-# driver (two ids per row — ≤ ~1.6 MB) and closes them with a union-find
-# instead of paying one distributed join+agg+checkpoint job per round of
-# graph diameter. Bounded in the codebook-collect sense; larger graphs
-# take the distributed label-propagation loop.
-_CC_COLLECT_MAX = 100_000
+from kinesis_data_counter_spark.session import bounded_collect, fan_out
 
 # ---------------------------------------------------------------------------
 # Tokenize / shingle plumbing (shared by jaccard, minhash, simhash)
@@ -816,24 +809,15 @@ def connected_components(
     # Small-graph fast path: the label loop below pays one join + agg +
     # checkpoint JOB per round of graph diameter — ~0.3-0.5 s of fixed
     # scheduling latency each even when the graph is a few hundred pairs
-    # (measured ~3 s for a 188-pair graph at sf0.1). When the pair
-    # population is bounded, ONE bounded collect (≤ _CC_COLLECT_MAX rows
-    # of two ids — a model-sized artifact in the codebook-collect sense,
-    # ≤ ~1.6 MB) plus a driver union-find computes the identical
-    # min-reachable-id labels in microseconds. The distributed loop
-    # remains the path for unbounded pair populations — the probe agg
-    # reads the persisted pair table the loop would have materialized
-    # anyway. NULL ids (impossible from the LSH/join producers, which key
-    # on them) fall through to the loop so the join-key NULL semantics
-    # stay bit-identical.
-    probe = pairs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.col(a_col).isNull().cast("int") + F.col(b_col).isNull().cast("int")
-        ).alias("nulls"),
-    ).collect()[0]
-    if probe["n"] <= _CC_COLLECT_MAX and not (probe["nulls"] or 0):
-        rows = pairs.select(a_col, b_col).collect()
+    # (measured ~3 s for a 188-pair graph at sf0.1). A pair graph small
+    # enough to collect is closed by a driver union-find into the
+    # identical min-reachable-id labels in microseconds; the gate reads
+    # the persisted pair table the loop would have materialized anyway.
+    # NULL ids (impossible from the LSH/join producers, which key on them)
+    # fall through to the loop so the join-key NULL semantics stay
+    # bit-identical.
+    rows = bounded_collect(pairs.select(a_col, b_col))
+    if rows is not None and all(None not in r for r in rows):
         parent: dict = {}
 
         def _find(x):

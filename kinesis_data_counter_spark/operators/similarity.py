@@ -24,6 +24,8 @@ are stable across partitionings and match a DuckDB oracle bit-for-bit.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 
@@ -32,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
-from kinesis_data_counter_spark.session import fan_out
+from kinesis_data_counter_spark.session import fan_out, run_concurrently
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -594,31 +596,6 @@ def ann_ivf_topk(
     )
 
 
-_MATERIALIZE_POOL = None
-
-
-def _materialize_async(df: DataFrame):
-    """Kick off a noop-sink materialization of a PERSISTED DataFrame in a
-    background thread and return the future. The recall checks use this
-    to overlap the exact brute-force job with the driver-side model
-    training of the approximate side (guide §2.6: the trainings are
-    sequential collect jobs that would otherwise leave the exact subtree
-    waiting); the final hit-ratio job then reads the exact side from
-    cache. Persistence (and unpersist) stay caller-managed. One shared
-    module-level pool: the previous per-call executor with
-    ``shutdown(wait=False)`` leaked a thread per recall check."""
-    global _MATERIALIZE_POOL
-    from concurrent.futures import ThreadPoolExecutor
-
-    if _MATERIALIZE_POOL is None:
-        _MATERIALIZE_POOL = ThreadPoolExecutor(
-            max_workers=2, thread_name_prefix="kdc-materialize"
-        )
-    return _MATERIALIZE_POOL.submit(
-        lambda: df.write.format("noop").mode("overwrite").save()
-    )
-
-
 def _hit_ratio(
     exact: DataFrame, approx: DataFrame, keys: list[str]
 ) -> tuple[int, int]:
@@ -633,6 +610,35 @@ def _hit_ratio(
         F.count(F.lit(1)).alias("total"), F.count("__hit").alias("hits")
     ).first()
     return int(row["total"]), int(row["hits"])
+
+
+def _recall_row(exact: DataFrame, approx: DataFrame, min_recall: float) -> DataFrame:
+    """The single (ok, recall) row of the recall checks: the share of
+    ``exact``'s (query_id, neighbor_id) rows that ``approx`` also holds."""
+    keys = ["query_id", "neighbor_id"]
+    total, hits = _hit_ratio(exact.select(keys), approx.select(keys), keys)
+    recall = hits / total if total else 1.0
+    return exact.sparkSession.createDataFrame(
+        [(bool(recall >= min_recall), float(round(recall, 2)))],
+        "ok boolean, recall double",
+    )
+
+
+def _trained_recall_row(
+    exact: DataFrame, build_approx: Callable[[], DataFrame], min_recall: float
+) -> DataFrame:
+    """``_recall_row`` for an approximate side whose ``build_approx()``
+    trains a model with sequential driver-side collect jobs: ``exact`` is
+    persisted and materialized on a noop sink concurrently with that
+    training, so the hit-ratio job reads it from cache instead of leaving
+    the brute force to run after the training."""
+    exact = exact.select("query_id", "neighbor_id").persist()
+    _, approx = run_concurrently(
+        [lambda: exact.write.format("noop").mode("overwrite").save(), build_approx]
+    )
+    out = _recall_row(exact, approx, min_recall)
+    exact.unpersist()
+    return out
 
 
 def ann_recall_check(
@@ -652,29 +658,17 @@ def ann_recall_check(
     lists, which no independent SQL engine could reproduce.
     ``method``: 'lsh' (hyperplane multi-table) or 'ivf' (inverted lists).
     """
-    exact = cosine_topk(corpus, queries, k).select("query_id", "neighbor_id")
-    fut = None
+    exact = cosine_topk(corpus, queries, k)
     if method == "ivf":
-        # IVF trains its coarse quantizer with sequential driver-side
-        # collect jobs — overlap the exact brute-force with them. LSH has
-        # no training jobs, so there the single fused hit-ratio job
-        # already runs both subtrees and a split would only serialize it.
-        exact = exact.persist()
-        fut = _materialize_async(exact)
-    ann = ann_ivf_topk if method == "ivf" else ann_lsh_topk
-    approx = ann(corpus, queries, dim, k, **ann_kwargs).select(
-        "query_id", "neighbor_id"
-    )
-    if fut is not None:
-        fut.result()
-    total, hits = _hit_ratio(exact, approx, ["query_id", "neighbor_id"])
-    if fut is not None:
-        exact.unpersist()
-    recall = hits / total if total else 1.0
-    spark = corpus.sparkSession
-    return spark.createDataFrame(
-        [(bool(recall >= min_recall), float(round(recall, 2)))], "ok boolean, recall double"
-    )
+        return _trained_recall_row(
+            exact,
+            lambda: ann_ivf_topk(corpus, queries, dim, k, **ann_kwargs),
+            min_recall,
+        )
+    # LSH has no training jobs, so the single fused hit-ratio job already
+    # runs both subtrees and a split would only serialize it
+    approx = ann_lsh_topk(corpus, queries, dim, k, **ann_kwargs)
+    return _recall_row(exact, approx, min_recall)
 
 
 # ---------------------------------------------------------------------------
@@ -770,18 +764,10 @@ def quantized_recall_check(
 ) -> DataFrame:
     """(ok, recall) single row: int8 top-k recall vs float brute force —
     the property-check oracle pattern for the quantization error bound."""
-    exact = cosine_topk(corpus, queries, k, id_col, vec_col).select(
-        "query_id", "neighbor_id"
-    )
-    quant = quantized_cosine_topk(corpus, queries, k, id_col, vec_col).select(
-        "query_id", "neighbor_id"
-    )
-    total, hits = _hit_ratio(exact, quant, ["query_id", "neighbor_id"])
-    recall = hits / total if total else 1.0
-    spark = corpus.sparkSession
-    return spark.createDataFrame(
-        [(bool(recall >= min_recall), float(round(recall, 2)))],
-        "ok boolean, recall double",
+    return _recall_row(
+        cosine_topk(corpus, queries, k, id_col, vec_col),
+        quantized_cosine_topk(corpus, queries, k, id_col, vec_col),
+        min_recall,
     )
 
 
@@ -1032,20 +1018,14 @@ def ivf_pq_topk(
     """
     if centroids is None and codebooks is None:
         # the two model trainings are independent (each reads the corpus;
-        # IVF runs 3 small collect jobs, PQ one collect + driver numpy) —
-        # train them concurrently so the PQ sample job back-fills the IVF
-        # refinement waves (guide §2.6: overlap independent jobs)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_c = pool.submit(
-                ivf_centroids, corpus, num_lists, dim, id_col, vec_col
-            )
-            fut_b = pool.submit(
-                pq_train_codebooks, corpus, dim, m, ksub,
-                id_col=id_col, vec_col=vec_col,
-            )
-            cents, books = fut_c.result(), fut_b.result()
+        # IVF runs 3 small collect jobs, PQ one collect + driver numpy), so
+        # they train concurrently
+        cents, books = run_concurrently([
+            lambda: ivf_centroids(corpus, num_lists, dim, id_col, vec_col),
+            lambda: pq_train_codebooks(
+                corpus, dim, m, ksub, id_col=id_col, vec_col=vec_col
+            ),
+        ])
     else:
         cents = centroids or ivf_centroids(corpus, num_lists, dim, id_col, vec_col)
         books = (
@@ -1161,23 +1141,12 @@ def ivf_pq_recall_check(
     """(ok, recall) single row: IVF-PQ top-k recall vs float brute force.
     Recall compounds both reductions (list recall × code recall), so the
     floor sits below the single-technique checks by design."""
-    exact = cosine_topk(corpus, queries, k, id_col, vec_col).select(
-        "query_id", "neighbor_id"
-    ).persist()
-    # overlap the exact brute-force with the (already-concurrent) IVF +
-    # PQ model trainings (guide §2.6)
-    fut = _materialize_async(exact)
-    approx = ivf_pq_topk(
-        corpus, queries, dim, k, id_col=id_col, vec_col=vec_col, **kwargs
-    ).select("query_id", "neighbor_id")
-    fut.result()
-    total, hits = _hit_ratio(exact, approx, ["query_id", "neighbor_id"])
-    exact.unpersist()
-    recall = hits / total if total else 1.0
-    spark = corpus.sparkSession
-    return spark.createDataFrame(
-        [(bool(recall >= min_recall), float(round(recall, 2)))],
-        "ok boolean, recall double",
+    return _trained_recall_row(
+        cosine_topk(corpus, queries, k, id_col, vec_col),
+        lambda: ivf_pq_topk(
+            corpus, queries, dim, k, id_col=id_col, vec_col=vec_col, **kwargs
+        ),
+        min_recall,
     )
 
 
@@ -1193,22 +1162,12 @@ def pq_recall_check(
 ) -> DataFrame:
     """(ok, recall) single row: PQ+refine top-k recall vs float brute
     force — the property-check oracle pattern for the quantizer."""
-    exact = cosine_topk(corpus, queries, k, id_col, vec_col).select(
-        "query_id", "neighbor_id"
-    ).persist()
-    # overlap the exact brute-force with PQ's codebook-training collect +
-    # driver-side k-means (guide §2.6)
-    fut = _materialize_async(exact)
-    approx = pq_topk(corpus, queries, dim, k, id_col=id_col, vec_col=vec_col,
-                     **pq_kwargs).select("query_id", "neighbor_id")
-    fut.result()
-    total, hits = _hit_ratio(exact, approx, ["query_id", "neighbor_id"])
-    exact.unpersist()
-    recall = hits / total if total else 1.0
-    spark = corpus.sparkSession
-    return spark.createDataFrame(
-        [(bool(recall >= min_recall), float(round(recall, 2)))],
-        "ok boolean, recall double",
+    return _trained_recall_row(
+        cosine_topk(corpus, queries, k, id_col, vec_col),
+        lambda: pq_topk(
+            corpus, queries, dim, k, id_col=id_col, vec_col=vec_col, **pq_kwargs
+        ),
+        min_recall,
     )
 
 

@@ -27,13 +27,7 @@ from decimal import ROUND_HALF_UP, Decimal
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# pagerank collects edge tables up to this many DISTINCT edges to the
-# driver (two short strings per row — a few MB) and runs the power
-# iterations in-process instead of paying ~2 scheduled jobs per iteration
-# plus the node-count/degree jobs. The connected_components
-# _CC_COLLECT_MAX precedent: bounded in the model-artifact sense; larger
-# graphs take the unchanged distributed loop.
-_PR_COLLECT_MAX = 100_000
+from kinesis_data_counter_spark.session import bounded_collect
 
 
 def _round_half_up6(x: float) -> float:
@@ -337,14 +331,13 @@ def pagerank(
         F.col(dst_col).cast("string").alias("dst"),
     ).where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull()).distinct()
     e = e.persist()
-    # Bounded-graph fast path (the connected_components _CC_COLLECT_MAX
-    # precedent): the distributed loop pays ~2 scheduled jobs per power
-    # iteration (dangling collect + the next round's first action) plus
-    # node-count/degree jobs — ~0.3-0.5 s of fixed scheduling latency each
-    # even on a 21-node domain graph. When the DISTINCT edge set is
-    # bounded (≤ _PR_COLLECT_MAX rows of two short strings — a model-sized
-    # collect), ONE probe/materialize job + one cached collect computes
-    # the identical trajectory on the driver: same per-round HALF_UP
+    # Bounded-graph fast path: the distributed loop pays ~2 scheduled
+    # jobs per power iteration (dangling collect + the next round's first
+    # action) plus node-count/degree jobs — ~0.3-0.5 s of fixed scheduling
+    # latency each even on a 21-node domain graph. When the DISTINCT edge
+    # set is small enough to collect, the gate (which materializes the
+    # persisted edges) + one cached collect computes the identical
+    # trajectory on the driver: same per-round HALF_UP
     # 6-digit rounding (Catalyst's BigDecimal.valueOf semantics —
     # _round_half_up6), exact fsum for the two order-sensitive sums (the
     # 6-digit round absorbs summation-order ulps, the same tolerance
@@ -353,13 +346,10 @@ def pagerank(
     # tests/test_pagerank_reference_vectors.py; graphs above the bound
     # take the unchanged distributed loop, as does ``checkpoint=False``
     # (the documented keep-the-lazy-lineage mode — plan inspection and
-    # the differential's distributed side both need the real loop). The
-    # count materializes the persisted edge cache the distributed loop
-    # would need anyway.
-    if checkpoint and e.count() <= _PR_COLLECT_MAX:
-        out = _pagerank_driver(
-            edges.sparkSession, e.collect(), damping, iters
-        )
+    # the differential's distributed side both need the real loop).
+    rows = bounded_collect(e) if checkpoint else None
+    if rows is not None:
+        out = _pagerank_driver(edges.sparkSession, rows, damping, iters)
         e.unpersist()
         return out
     nodes = (

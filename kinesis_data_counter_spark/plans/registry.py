@@ -34,7 +34,7 @@ from kinesis_data_counter_spark.operators import web as WB
 from kinesis_data_counter_spark.operators import windows as WN
 from kinesis_data_counter_spark.operators import history as HS
 from kinesis_data_counter_spark import metrics as MT
-from kinesis_data_counter_spark.session import load_tables
+from kinesis_data_counter_spark.session import load_tables, run_concurrently
 
 EVENTS_ARN = "arn:aws:kinesis:us-east-1:111122223333:stream/events"
 HLL_TOL = 0.05  # reference's accepted estimation error (counter_test.go:66)
@@ -578,11 +578,10 @@ def _ordered_doc_slices(spark, sf_dir, prefix, n=3):
     cuts = docs.approxQuantile("doc_id", [k / n for k in range(1, n)], 0.001)
     bounds = [None, *cuts, None]
 
-    # the n slice writes are independent single-file jobs over the same
-    # tiny cached scan — run them concurrently (guide §2.6) so each job's
-    # single write task back-fills the others' scheduling gaps; the mtime
-    # stamping that defines arrival order happens AFTER all writes, in
-    # slice order, so the drain order is exactly the sequential loop's
+    # the n slice writes are independent single-file jobs, so they run
+    # concurrently; the mtime stamping that defines arrival order happens
+    # AFTER all writes, in slice order, so the drain order is exactly the
+    # sequential loop's
     def _write_slice(k: int) -> None:
         part = docs
         if bounds[k] is not None:
@@ -591,10 +590,7 @@ def _ordered_doc_slices(spark, sf_dir, prefix, n=3):
             part = part.filter(F.col("doc_id") < bounds[k + 1])
         part.coalesce(1).write.parquet(os.path.join(src, f"slice{k}"))
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=n) as pool:
-        list(pool.map(_write_slice, range(n)))
+    run_concurrently([lambda k=k: _write_slice(k) for k in range(n)])
     for k in range(n):
         pdir = os.path.join(src, f"slice{k}")
         t = _time.time() + k  # strictly increasing mtimes = arrival order
@@ -1189,12 +1185,9 @@ def _q_rfm_segments(spark, sf_dir):
     ).persist()
     # the three dimension ntiles are INDEPENDENT range-partition + offset
     # computations, each with driver-side collects (partition counts) that
-    # otherwise serialize three small job waves; build them concurrently
-    # so each wave back-fills the others' stragglers (guide §2.6 overlap
-    # of independent jobs). Result DataFrames are deterministic, so the
-    # lazy join below is unchanged.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # would otherwise serialize three small job waves, so they are built
+    # concurrently. Result DataFrames are deterministic, so the lazy join
+    # below is unchanged.
     def _tiles(col: str, out: str):
         return global_ntile(
             per_cust.select("o_custkey", col),
@@ -1204,8 +1197,7 @@ def _q_rfm_segments(spark, sf_dir):
         ).select("o_custkey", out)
 
     dims = (("last_order", "r_q"), ("n_orders", "f_q"), ("spend", "m_q"))
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        tile_dfs = list(pool.map(lambda d: _tiles(*d), dims))
+    tile_dfs = run_concurrently([lambda d=d: _tiles(*d) for d in dims])
     seg = per_cust.select("o_custkey")
     for tiles in tile_dfs:
         seg = seg.join(tiles, "o_custkey")

@@ -242,3 +242,62 @@ def fan_out(df: DataFrame, key=None, min_parts: int | None = None) -> DataFrame:
     from pyspark.sql import functions as F
 
     return df.repartition(n, F.col(key) if isinstance(key, str) else key)
+
+
+def run_concurrently(thunks) -> list:
+    """Run independent zero-argument callables (normally each one or more
+    Spark actions) side by side; return their results in order.
+
+    Actions only run one after another because driver code calls them one
+    after another. Submitted from separate threads, independent jobs share
+    the scheduler, so each job's tasks back-fill cores the others' stragglers
+    leave idle (the reference's goroutine-per-counter join, counter.go:176-196).
+
+    Bound: one plain thread per thunk, so the caller's input sizes it; the
+    largest call site passes 5 (``stream_curate``'s tail writes). There is
+    no worker cap because every caller submits a fixed, small set of jobs.
+    A single thunk runs inline on the calling thread. Every thunk runs to completion before the first exception, in
+    thunk order, is raised, so no job is left running behind the caller.
+    """
+    thunks = list(thunks)
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    from concurrent.futures import ThreadPoolExecutor
+
+    # leaving the block waits for every thunk, failed or not
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(t) for t in thunks]
+    return [f.result() for f in futures]
+
+
+# bounded_collect's bounds, read at call time. Both sit well above every
+# fast-path input the registry builds (connected_components pair graphs are
+# ≤ ~1.6 MB, pagerank edge tables a few MB).
+DRIVER_COLLECT_MAX_ROWS = 100_000
+DRIVER_COLLECT_MAX_BYTES = 16 * 1024 * 1024
+
+
+def bounded_collect(df: DataFrame) -> list | None:
+    """``df.collect()`` when ``df`` is small enough to hold on the driver,
+    else ``None`` (the caller then takes its distributed path).
+
+    One aggregate reads the row count and the text size in bytes (the sum of
+    ``octet_length(cast(c AS STRING))`` over every column); the collect runs
+    only when both are within ``DRIVER_COLLECT_MAX_ROWS`` and
+    ``DRIVER_COLLECT_MAX_BYTES``. Persist ``df`` first if it is expensive:
+    the gate and the collect each read it.
+    """
+    from pyspark.sql import functions as F
+
+    size = F.lit(0).cast("bigint")
+    for c in df.columns:
+        size = size + F.coalesce(F.octet_length(df[c].cast("string")), F.lit(0))
+    gate = df.agg(
+        F.count(F.lit(1)).alias("n"), F.sum(size).alias("bytes")
+    ).collect()[0]
+    if (
+        gate["n"] > DRIVER_COLLECT_MAX_ROWS
+        or (gate["bytes"] or 0) > DRIVER_COLLECT_MAX_BYTES
+    ):
+        return None
+    return df.collect()

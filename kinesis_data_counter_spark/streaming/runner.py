@@ -56,7 +56,7 @@ from kinesis_data_counter_spark.operators.counter import (
     merge_partials,
     partial_counter,
 )
-from kinesis_data_counter_spark.session import configure_session
+from kinesis_data_counter_spark.session import configure_session, run_concurrently
 
 
 def _read_stream(
@@ -494,7 +494,7 @@ def _segment_dedup_batch(
         )
     )
     # both tables consume the persisted fresh/chunks cutpoints and are
-    # otherwise independent — concurrent jobs (guide §2.6)
+    # otherwise independent
     _write_batch_keyed_many(
         [(out, out_dir), (fresh.select("__h"), idx_dir)], epoch
     )
@@ -534,30 +534,14 @@ _WRITTEN_SCHEMAS: dict[str, "T.StructType"] = {}
 
 
 def _write_batch_keyed_many(items, epoch: int) -> None:
-    """Run several independent batch-keyed writes as CONCURRENT jobs
-    (guide §2.6: actions are only sequential because driver code calls
-    them sequentially; submitting independent jobs from a small thread
-    pool lets each job's tasks back-fill executors idled by the others'
-    stragglers). Safe here because the writes target disjoint table
-    roots and every shared upstream is persisted — concurrent
-    materialization of a cached parent is serialized per block by the
-    block manager's write locks, so the parent still computes once.
-
-    ``items``: sequence of (df, root) pairs.
-    """
-    if len(items) == 1:
-        df, root = items[0]
-        _write_batch_keyed(df, root, epoch)
-        return
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(items)) as pool:
-        futures = [
-            pool.submit(_write_batch_keyed, df, root, epoch)
-            for df, root in items
-        ]
-        for f in futures:
-            f.result()
+    """``_write_batch_keyed`` for each (df, root) pair, as concurrent jobs.
+    Safe because the writes target disjoint table roots and every shared
+    upstream is persisted — concurrent materialization of a cached parent
+    is serialized per block by the block manager's write locks, so the
+    parent still computes once."""
+    run_concurrently(
+        [lambda d=d, r=r: _write_batch_keyed(d, r, epoch) for d, r in items]
+    )
 
 
 def _batch_keyed_reader(spark: SparkSession, root: str):
@@ -659,7 +643,7 @@ def stream_neardup_index(
                 bands_table=inc_bands,
             )
         # independent consumers of the persisted batch_df/inc_bands
-        # cutpoints — write them as concurrent jobs (guide §2.6)
+        # cutpoints
         _write_batch_keyed_many(
             [
                 (pairs, pairs_dir),
@@ -1213,7 +1197,7 @@ def _curate_batch(
         )
     # ALL five tail tables are independent consumers of the persisted
     # base/gated/fresh/fresh_bands cutpoints — write them as ONE wave of
-    # concurrent jobs (guide §2.6). The rejected and content-hash writes
+    # concurrent jobs. The rejected and content-hash writes
     # used to run as two earlier sequential waves, paying two extra job
     # tails per micro-batch; nothing reads rejected_dir, and nothing in
     # this batch reads hash_dir (the exact-dedup anti-join read its

@@ -109,6 +109,29 @@ counters:
     assert req_total == n_records
 
 
+@pytest.mark.parametrize("go, interval", [("1m", "1 minute"), ("1h", "1 hour")])
+def test_cli_config_window_accepts_go_durations(sf_dir, tmp_path, go, interval):
+    # a YAML window takes the same Go durations as --window: Spark plans
+    # `1m` only after it is normalized to an interval string
+    outs = []
+    for window in (go, interval):
+        cfg = tmp_path / f"{window.replace(' ', '_')}.yaml"
+        cfg.write_text(
+            "counters:\n"
+            "  - id: req_count\n    counter_type: count\n    target_column: '*'\n"
+            f"    window: {window}\n"
+            "  - id: uniq_users\n    counter_type: approx_count_distinct\n"
+            f"    target_column: user_id\n    window: {window}\n"
+        )
+        buf = io.StringIO()
+        assert main(
+            ["--path", f"{sf_dir}/events.parquet", "--config", str(cfg)], out=buf
+        ) == 0
+        outs.append(buf.getvalue())
+    assert outs[0] == outs[1]
+    assert len(outs[0].splitlines()) > 2
+
+
 def test_cli_config_follow_runs_multi_counter_stream(spark, sf_dir, tmp_path):
     # streaming fan-out parity: every routed counter drains the stream and
     # the unioned output matches the batch config run

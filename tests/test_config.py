@@ -12,6 +12,11 @@ def test_defaults_count_all():
     assert spec.counter_type == "count"
 
 
+def test_window_go_durations_normalized():
+    assert CounterSpec(id="c", window="30s").validate().window == "30 seconds"
+    assert CounterSpec(id="c", window="1 minute").validate().window == "1 minute"
+
+
 def test_distinct_star_rejected():
     with pytest.raises(ConfigError):
         CounterSpec(id="c", counter_type="approx_count_distinct").validate()

@@ -211,14 +211,16 @@ def test_connected_components_chain_and_triangle(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
-def test_connected_components_fast_path_matches_loop(spark):
-    # the bounded union-find fast path (pairs ≤ _CC_COLLECT_MAX) must be
-    # bit-identical to the distributed label-propagation loop — rows,
-    # values AND schema — on chains, stars, dupes/self-loops and a
-    # random graph; the empty graph must come back empty on both paths
+def test_connected_components_fast_path_matches_loop(spark, monkeypatch):
+    # the bounded union-find fast path (pairs within bounded_collect's
+    # bounds) must be bit-identical to the distributed label-propagation
+    # loop — rows, values AND schema — on chains, stars, dupes/self-loops
+    # and a random graph; the empty graph must come back empty on both
+    # paths
     import random
 
     import kinesis_data_counter_spark.operators.dedup as DD
+    from kinesis_data_counter_spark import session
 
     random.seed(7)
     cases = {
@@ -237,15 +239,40 @@ def test_connected_components_fast_path_matches_loop(spark):
         if not edges:
             df = df.filter(F.lit(False))
         fast = DD.connected_components(df)
-        saved = DD._CC_COLLECT_MAX
-        DD._CC_COLLECT_MAX = -1  # force the distributed loop
-        try:
+        with monkeypatch.context() as m:
+            # force the distributed loop
+            m.setattr(session, "DRIVER_COLLECT_MAX_ROWS", -1)
             slow = DD.connected_components(df)
             diff = fast.exceptAll(slow).count() + slow.exceptAll(fast).count()
-        finally:
-            DD._CC_COLLECT_MAX = saved
         assert diff == 0, name
         assert fast.schema == slow.schema, name
+
+
+def test_byte_bound_sends_connected_components_down_the_loop(spark, monkeypatch):
+    # a pair graph far under the row bound but over the (shrunk) byte bound
+    # is not collected: it takes the label-propagation loop, which must
+    # still equal the union-find fast path
+    import random
+
+    from kinesis_data_counter_spark import session
+
+    rng = random.Random(20261018)
+    df = spark.createDataFrame(
+        [(rng.randrange(300), rng.randrange(300)) for _ in range(200)],
+        "a_id long, b_id long",
+    )
+    fast = sorted(map(tuple, DD.connected_components(df).collect()))
+    gate = []
+
+    def spy(frame):
+        gate.append(session.bounded_collect(frame))
+        return gate[-1]
+
+    monkeypatch.setattr(session, "DRIVER_COLLECT_MAX_BYTES", 100)
+    monkeypatch.setattr(DD, "bounded_collect", spy)
+    loop = sorted(map(tuple, DD.connected_components(df).collect()))
+    assert gate == [None]
+    assert loop == fast
 
 
 def test_shingle_word_hash_projection_stays_separate(spark):

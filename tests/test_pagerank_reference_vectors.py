@@ -40,6 +40,7 @@ import random
 import numpy as np
 import pytest
 
+from kinesis_data_counter_spark import session
 from kinesis_data_counter_spark.operators.web import pagerank
 
 # ---------------------------------------------------------------------------
@@ -189,7 +190,7 @@ def test_round_half_up6_matches_spark_round(spark):
     assert _round_half_up6(0.0000025) == 3e-6
 
 
-def test_driver_fast_path_matches_distributed_loop(spark):
+def test_driver_fast_path_matches_distributed_loop(spark, monkeypatch):
     # checkpoint=True (default) takes the bounded-collect driver fast
     # path; checkpoint=False keeps the distributed loop. Full rows —
     # node, rank, out_deg, in_deg — must be BIT-identical across graphs
@@ -220,6 +221,44 @@ def test_driver_fast_path_matches_distributed_loop(spark):
             )
         )
         assert fast == dist, (edges, d, iters)
+    # realistic size: hundreds of nodes over ten rounds, where summation
+    # order and rounding ties have room to diverge. The distributed side is
+    # the checkpointed loop, forced by the shared row bound: the lazy
+    # checkpoint=False lineage doubles every round (2^10 plan copies here)
+    for _ in range(2):
+        n = rng.randint(200, 600)
+        df = spark.createDataFrame(
+            _random_graph(rng, n, rng.randint(n, 3 * n)), "src string, dst string"
+        )
+        fast = sorted(map(tuple, pagerank(df, iters=10).collect()))
+        with monkeypatch.context() as m:
+            m.setattr(session, "DRIVER_COLLECT_MAX_ROWS", -1)
+            loop = sorted(map(tuple, pagerank(df, iters=10).collect()))
+        assert fast == loop, n
+
+
+def test_byte_bound_sends_pagerank_down_the_distributed_loop(spark, monkeypatch):
+    # a graph far under the row bound but over the (shrunk) byte bound is
+    # not collected: the default checkpointed call takes the distributed
+    # loop, which must still equal the driver fast path
+    from kinesis_data_counter_spark.operators import web
+
+    rng = random.Random(20261018)
+    df = spark.createDataFrame(
+        _random_graph(rng, 60, 150), "src string, dst string"
+    )
+    fast = sorted(map(tuple, pagerank(df, iters=4).collect()))
+    gate = []
+
+    def spy(frame):
+        gate.append(session.bounded_collect(frame))
+        return gate[-1]
+
+    monkeypatch.setattr(session, "DRIVER_COLLECT_MAX_BYTES", 100)
+    monkeypatch.setattr(web, "bounded_collect", spy)
+    loop = sorted(map(tuple, pagerank(df, iters=4).collect()))
+    assert gate == [None]
+    assert loop == fast
 
 
 def test_falsifier_no_dangling_redistribution_differs():
