@@ -985,14 +985,16 @@ def main() -> None:
     # which truncates total_bench_seconds and most per-query timings
     # (VERDICT r6 item 1) — persist the FULL result to a tracked history
     # file so round-over-round regressions stay provable. Append-per-run:
-    # each line is one complete result object, newest last.
+    # each line is one complete result object, newest last. A forced line
+    # is never compared round-over-round, so it is not recorded.
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BENCH_LOCAL.json"),
-            "a",
-        ) as fh:
-            fh.write(json.dumps({"ts": round(time.time(), 1), **result}) + "\n")
+        if result["quiet_gate"] != "forced":
+            with open(
+                os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             "BENCH_LOCAL.json"),
+                "a",
+            ) as fh:
+                fh.write(json.dumps({"ts": round(time.time(), 1), **result}) + "\n")
     except OSError:  # history must never sink the metric line
         pass
     # the driver records only the LAST 2,000 chars of stdout, and a full

@@ -11,7 +11,8 @@ io.Writer sink (run.go console output).
 
 ``--follow`` runs the streaming path (availableNow drain — bounded here,
 continuous on a real stream); the reference's <15-minute window limit
-(main.go:113-116) is enforced only in this mode, where it originates: it
+(main.go:113-116) is enforced only in this mode, on ``--window`` or on
+every routed config counter's window, where it originates: it
 exists because the CLI buffers per-window state in memory, which Spark's
 state store makes unnecessary in batch.
 """
@@ -111,21 +112,8 @@ def main(argv: list[str] | None = None, out: io.TextIOBase | None = None) -> int
     from kinesis_data_counter_spark.streaming.sinks import console_writer
 
     window = parse_window(args.window)
-    if args.follow:
-        try:
-            minutes = window_minutes(window)
-        except ValueError as e:
-            print(f"error: {e}", file=sys.stderr)
-            return 2
-        if minutes >= 15:
-            # reference CLI validation, main.go:113-116
-            print("error: streaming window must be < 15 minutes", file=sys.stderr)
-            return 2
-
-    spark = get_spark(app_name="kdc-cli")
-    spark.sparkContext.setLogLevel("ERROR")
-
     arn = args.stream_arn
+    cfg = None
     if args.config:
         from kinesis_data_counter_spark import __version__
 
@@ -136,6 +124,26 @@ def main(argv: list[str] | None = None, out: io.TextIOBase | None = None) -> int
         except ConfigError as e:
             print(f"error: {e}", file=sys.stderr)
             return 2
+    if args.follow:
+        # reference CLI validation, main.go:113-116, on every window the
+        # stream runs: each routed counter's, or --window's
+        windows = (
+            [spec.window for spec in cfg.counters_for_source(arn)]
+            if cfg is not None else [window]
+        )
+        try:
+            minutes = max(map(window_minutes, windows), default=0)
+        except ValueError as e:
+            print(f"error: {e}", file=sys.stderr)
+            return 2
+        if minutes >= 15:
+            print("error: streaming window must be < 15 minutes", file=sys.stderr)
+            return 2
+
+    spark = get_spark(app_name="kdc-cli")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    if cfg is not None:
         if args.follow:
             # streaming fan-out ≈ the reference's goroutine-per-counter
             # (counter.go:176-196): each matching counter drains the same
@@ -184,17 +192,22 @@ def main(argv: list[str] | None = None, out: io.TextIOBase | None = None) -> int
                 _load_input(spark, args.path, args.ts_col), spec, ts_col=args.ts_col
             )
 
-    console_writer(out)(result.orderBy(*result.columns[:2]), 0)
+    # at most windows × counters rows: one sorted partition is one job,
+    # where a range sort samples, shuffles and collects in three
+    console_writer(out)(
+        result.coalesce(1).sortWithinPartitions(*result.columns[:2]), 0
+    )
     return 0
 
 
 def _load_input(spark, path: str, ts_col: str):
     """Load the input through the same nanos-aware path as the fixtures.
 
-    A directory of ``shard-*.jsonl`` files is read through the
-    kinesis_replay data source with the JSON body lifted to columns — the
-    CLI then points at a (simulated) stream exactly like the reference's
-    ``-stream`` flag, not just at parquet.
+    A directory of ``shard-*.jsonl`` files is read as a batch of parsed
+    records (``open_shard_records``: one JVM text scan and one JSON decode
+    per record, body fields lifted to columns) — the CLI then points at a
+    (simulated) stream exactly like the reference's ``-stream`` flag, not
+    just at parquet.
     """
     import os
 

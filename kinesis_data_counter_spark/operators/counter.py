@@ -137,10 +137,12 @@ def _counter_frames(
     Specs sharing a window share ONE ``groupBy(window[, shard]).agg(v0, v1,
     …)``; each counter is a ``select`` of its own value column from it. An
     aggregate read by more than one counter is materialized with
-    ``localCheckpoint`` (batch only): Spark never reuses a Python-DataSource
-    scan across union branches, and ColumnPruning would split a shared lazy
-    aggregate back into one scan per branch. ``localCheckpoint`` rather
-    than ``persist``: the CacheManager matches persisted plans by canonical
+    ``localCheckpoint`` (batch only): ColumnPruning gives each union branch
+    its own projection of a shared lazy aggregate, so their exchanges
+    differ and the union plans one scan and one aggregate per counter (4
+    counters over a shard dir: 4 ``FileScan``s; only branches with equal
+    aggregates reuse an exchange). ``localCheckpoint`` rather than
+    ``persist``: the CacheManager matches persisted plans by canonical
     plan, so a later call over equal input could be served a stale result.
     """
     groups: dict[str, list[CounterSpec]] = {}
@@ -247,7 +249,9 @@ def merge_partials(partials: DataFrame, spec: CounterSpec) -> DataFrame:
     ≈ aggregateProcess (counter.go:348-412): filter to this counter's rows
     (F7 — mismatched counter_id/type rows are dropped, counter.go:365-370),
     merge their states per window, finalize, and apply the jq output
-    transform like ``build_counter``.
+    transform like ``build_counter``. The rows are ``build_counter``'s
+    without a shard: ``event_source_arn`` is the spec's
+    ``input_stream_arn``, as ``build_counter`` emits when given no ARN.
     """
     mine = partials.filter(
         (F.col("counter_id") == spec.id)
@@ -259,6 +263,7 @@ def merge_partials(partials: DataFrame, spec: CounterSpec) -> DataFrame:
         mine.groupBy("window")
         .agg(value.cast("long").alias("value"))
         .select(
+            F.lit(spec.input_stream_arn).alias("event_source_arn"),
             F.unix_millis(F.col("window.start")).alias("window_start"),
             F.unix_millis(F.col("window.end")).alias("window_end"),
             F.lit(spec.id).alias("counter_id"),

@@ -879,21 +879,23 @@ SELECT '{EVENTS_ARN}', epoch_ms(date_trunc('day', ts)),
        'click_events', 'count', count(*) FILTER (contains(event_type, 'click'))
 FROM events GROUP BY 1, 2, 3, 4, 5
 """,
-    "counter_partial_merge": """
-SELECT epoch_ms(date_trunc('hour', ts)) AS window_start,
+    "counter_partial_merge": f"""
+SELECT '{EVENTS_ARN}' AS event_source_arn,
+       epoch_ms(date_trunc('hour', ts)) AS window_start,
        epoch_ms(date_trunc('hour', ts) + INTERVAL 1 HOUR) AS window_end,
        'req_count' AS counter_id, 'count' AS counter_type,
        count(*) AS value
-FROM events GROUP BY 1, 2, 3, 4
+FROM events GROUP BY 1, 2, 3, 4, 5
 """,
     # the streamed two-level exchange drains to exactly the batch answer:
     # micro-batch membership is arbitrary, partial counts merge by sum
-    "streaming_two_level_replay": """
-SELECT epoch_ms(date_trunc('hour', ts)) AS window_start,
+    "streaming_two_level_replay": f"""
+SELECT '{EVENTS_ARN}' AS event_source_arn,
+       epoch_ms(date_trunc('hour', ts)) AS window_start,
        epoch_ms(date_trunc('hour', ts) + INTERVAL 1 HOUR) AS window_end,
        'req_count' AS counter_id, 'count' AS counter_type,
        count(*) AS value
-FROM events GROUP BY 1, 2, 3, 4
+FROM events GROUP BY 1, 2, 3, 4, 5
 """,
     # replay of the exact md5-bucket CMS (depth 4 × width 16^2): the sketch
     # arithmetic is engine-portable, so cells, estimates, and the one-sided

@@ -14,8 +14,9 @@ line is one record's data (JSON). Optional envelope keys ``__pk`` (partition
 key) and ``__arrival_ms`` (approximate arrival time) are lifted into columns
 when present, mirroring the Kinesis record metadata the reference reads
 (run.go:107); the full line stays in ``data`` for the engine's JSON-decode
-stage (S4). A line that is not a JSON object has a NULL
-``approximate_arrival``, so windowing on arrival time drops it.
+stage (S4). A line that is not a JSON object, or an object with no
+``__arrival_ms``, has a NULL ``approximate_arrival``, so windowing on
+arrival time drops it.
 
 Output schema (per record ≈ KinesisEventRecord):
   shard_id string, sequence_number bigint, partition_key string,
@@ -45,6 +46,12 @@ converter + batch assembly in Python. The batch schema is pinned to the
 exact Arrow schema Spark derives from ``SCHEMA``
 (``to_arrow_schema``: timestamp[us, tz=UTC]) because the worker validates
 names only — a drifted type would surface as a JVM-side Arrow error.
+
+Record-level view (``open_shard_records``, the CLI's entry): the JSON of
+each record is decoded once, on the JVM, by one ``from_json`` shared by
+both modes. A batch read needs none of the offset logic above, so it scans
+the shard files with Spark's text source and no Python worker runs; only
+the stream, which tails per-shard offsets, reads through this source.
 """
 
 from __future__ import annotations
@@ -142,11 +149,14 @@ def _record_batches(
                 obj = json.loads(line)
                 if isinstance(obj, dict):
                     pk = obj.get("__pk")
-                    arrival_us = int(obj.get("__arrival_ms", 0)) * 1000
+                    arrival_ms = obj.get("__arrival_ms")
+                    if arrival_ms is not None:
+                        arrival_us = int(arrival_ms) * 1000
             except ValueError:
                 pass
-            # a line that is not a JSON object keeps its data for the S4
-            # bad-record router but has no arrival time: windowing on it
+            # a line that is not a JSON object, or has no __arrival_ms,
+            # keeps its data for the S4 bad-record router but has no
+            # arrival time: windowing on it
             # drops the record, as the reference drops an undecodable
             # record as a batch-item failure (counter.go:241-252)
             seqs.append(seq)
@@ -447,46 +457,74 @@ def is_shard_dir(path: str) -> bool:
 def open_shard_records(spark, path: str, streaming: bool = False, ts_col: str = "ts"):
     """Read a shard dir as parsed event records (the CLI/stream entry shape).
 
-    The JSON body of each record is lifted into columns (schema inferred
-    from the first record, like the reference's schemaless per-record
-    decode, counter.go:241-252 — but resolved ONCE at plan time so the
-    executors run a typed, codegen'd from_json). ``ts_col`` falls back to
-    the record's approximate arrival time when the body has no such field
-    — exactly the reference's arrival-time windowing (run.go:107).
+    Each record's JSON is decoded ONCE, on the JVM, by one typed, codegen'd
+    ``from_json`` (the reference decodes a record once and updates every
+    counter from it, counter.go:170-204). The body schema comes from the
+    first record, like the reference's schemaless per-record decode
+    (counter.go:241-252), but resolved at plan time; the envelope keys
+    ``__pk`` → ``partition_key`` and ``__arrival_ms`` (an integer or a
+    float) → ``approximate_arrival`` are lifted whether or not that record
+    has them. A line that is not a JSON object, or an object with no
+    ``__arrival_ms``, has a NULL arrival time, so windowing on it drops the
+    record. ``ts_col`` falls back to the arrival time when the body has no
+    such field — the reference's arrival-time windowing (run.go:107).
+
+    The two modes differ only in the source. Batch reads the shard files
+    with Spark's text scan (``shard_id`` is the file name); its frame has
+    no ``sequence_number`` — no batch consumer reads one and a text scan
+    has no line index. Streaming tails per-shard offsets through the
+    ``kinesis_replay`` source and keeps ``sequence_number``.
     """
     from pyspark.sql import functions as F
 
-    spark.dataSource.register(KinesisReplayDataSource)
-    reader = (spark.readStream if streaming else spark.read).format(
-        "kinesis_replay"
-    ).option("path", path)
-    df = reader.load()
-
-    sample = None
-    for p in _shard_files(path).values():
-        with open(p, "r", encoding="utf-8") as f:
-            for line in f:
-                if line.strip():
-                    sample = line.strip()
-                    break
-        if sample:
-            break
-    if sample is None:
-        return df  # empty stream: serve the raw wire schema
-
-    parsed = df.withColumn(
-        "__j", F.from_json("data", F.schema_of_json(F.lit(sample)))
-    )
-    body_cols = [
-        c for c in parsed.select("__j.*").columns if not c.startswith("__")
-    ]
+    if streaming:
+        spark.dataSource.register(KinesisReplayDataSource)
+        wire = (
+            spark.readStream.format("kinesis_replay").option("path", path).load()
+            .select("shard_id", "sequence_number", "data")
+        )
+    else:
+        wire = (
+            spark.read.text(os.path.join(path, "shard-*.jsonl"))
+            .where(F.col("value").rlike(r"\S"))  # the source skips blank lines
+            .select(
+                F.regexp_replace("_metadata.file_name", r"\.jsonl$", "").alias("shard_id"),
+                F.col("value").alias("data"),
+            )
+        )
+    keep = [c for c in wire.columns if c != "data"]
+    # the parsed struct's fields come out of a generator, so a filter on
+    # one of them (windowing's isnotnull on the arrival time) stays above
+    # the one from_json instead of being pushed below it as a second parse
+    parsed = wire.select(*keep, F.inline_outer(F.array(
+        F.from_json("data", F.schema_of_json(F.lit(_record_sample(path)))))))
+    body_cols = [c for c in parsed.columns[len(keep):] if not c.startswith("__")]
     out = parsed.select(
-        "shard_id",
-        "sequence_number",
-        "partition_key",
-        "approximate_arrival",
-        *[F.col(f"__j.{c}").alias(c) for c in body_cols],
+        *keep,
+        F.col("__pk").alias("partition_key"),
+        F.timestamp_millis(F.col("__arrival_ms").cast("long")).alias(
+            "approximate_arrival"
+        ),
+        *body_cols,
     )
     if ts_col is not None and ts_col not in out.columns:
         out = out.withColumn(ts_col, F.col("approximate_arrival"))
     return out
+
+
+# Envelope keys forced into the schema sample: a STRING partition key and a
+# DOUBLE arrival time, which parses an integer or a float millisecond value.
+_ENVELOPE_SAMPLE = {"__pk": "", "__arrival_ms": 0.5}
+
+
+def _record_sample(path: str) -> str:
+    """The dir's first record, which must be a JSON object, with the
+    envelope keys forced in: the sample the record schema is inferred from
+    (no Spark job). Before any record, the envelope alone."""
+    for p in _shard_files(path).values():
+        with open(p, "r", encoding="utf-8") as f:
+            line = next((ln.strip() for ln in f if ln.strip()), None)
+        if line is not None:
+            return json.dumps({**json.loads(line), **_ENVELOPE_SAMPLE})
+    return json.dumps(_ENVELOPE_SAMPLE)
+

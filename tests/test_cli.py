@@ -47,10 +47,23 @@ def test_cli_follow_streaming_matches_batch(spark, sf_dir):
     assert batch == stream
 
 
-def test_cli_follow_rejects_reference_window_limit(sf_dir):
+def test_cli_follow_rejects_reference_window_limit(sf_dir, tmp_path):
     # reference CLI validation (main.go:113-116): streaming windows < 15m
     assert main(
         ["--path", f"{sf_dir}/events.parquet", "--window", "15m", "--follow"],
+        out=io.StringIO(),
+    ) == 2
+    # on every routed config counter's window too, not only on --window
+    cfg = tmp_path / "c.yaml"
+    cfg.write_text(
+        "counters:\n"
+        "  - id: req_count\n    counter_type: count\n    target_column: '*'\n"
+        "    window: 1 minute\n"
+        "  - id: hourly\n    counter_type: count\n    target_column: '*'\n"
+        "    window: 1 hour\n"
+    )
+    assert main(
+        ["--path", f"{sf_dir}/events.parquet", "--config", str(cfg), "--follow"],
         out=io.StringIO(),
     ) == 2
 
@@ -139,9 +152,9 @@ def test_cli_config_follow_runs_multi_counter_stream(spark, sf_dir, tmp_path):
     cfg.write_text(
         "counters:\n"
         "  - id: req_count\n    counter_type: count\n    target_column: '*'\n"
-        "    window: 1 hour\n"
+        "    window: 10 minutes\n"
         "  - id: uniq_users\n    counter_type: approx_count_distinct\n"
-        "    target_column: user_id\n    window: 1 hour\n"
+        "    target_column: user_id\n    window: 10 minutes\n"
     )
     b1, b2 = io.StringIO(), io.StringIO()
     args = ["--path", f"{sf_dir}/events.parquet", "--config", str(cfg)]
@@ -295,8 +308,78 @@ def test_cli_drops_a_truncated_shard_line(spark, tmp_path):
     assert len(by_id["uniq_users"]) == 5 and max(by_id["uniq_users"]) == 7
 
 
+def test_cli_batch_matches_follow_over_edge_lines(spark, tmp_path):
+    # every odd line a shard can carry: the batch text scan and the
+    # --follow replay source decode them alike, and none is counted into a
+    # window starting at epoch 0
+    import datetime as dt
+
+    from kinesis_data_counter_spark.sources.replay_source import (
+        open_shard_records,
+    )
+    from kinesis_data_counter_spark.streaming.runner import drain
+
+    base = int(dt.datetime(2021, 12, 1, 11, 0, tzinfo=dt.timezone.utc).timestamp() * 1000)
+
+    def rec(i, **extra):
+        return json.dumps({"__pk": f"u{i}", "__arrival_ms": base + i * 20_000,
+                           "user_id": i % 4,
+                           "event_type": "click" if i % 2 else "view", **extra})
+
+    first = json.loads(rec(0))
+    del first["__pk"]
+    shards = {
+        "shard-000.jsonl": [
+            json.dumps(first),  # the schema sample has no __pk
+            '{"__pk": "u1", "__arrival_ms": 16383',  # truncated in transit
+            "",
+            "[1,2]",
+            "not json",
+            json.dumps({"__pk": "u9", "user_id": 9, "event_type": "click"}),
+            json.dumps({"__pk": "u2", "__arrival_ms": base + 40_000.75,
+                        "user_id": 2, "event_type": "click"}),  # float arrival
+            rec(3, ts=12),  # its own ts is no sampled field: arrival windows it
+        ],
+        "shard-001.jsonl": [rec(i) for i in range(4, 12)],
+    }
+    d = tmp_path / "edge"
+    d.mkdir()
+    for name, lines in shards.items():
+        (d / name).write_text("\n".join(lines) + "\n")
+    cfg = tmp_path / "c.yaml"
+    cfg.write_text(_FANOUT_CONFIG)
+
+    args = ["--path", str(d), "--config", str(cfg)]
+    b1, b2 = io.StringIO(), io.StringIO()
+    assert main(args, out=b1) == 0
+    assert main(args + ["--follow"], out=b2) == 0
+    batch = sorted(b1.getvalue().splitlines())
+    assert batch == sorted(b2.getvalue().splitlines())
+    rows = [json.loads(l) for l in batch]
+    assert all(r.get("window_start") != 0 and r.get("time") != 0 for r in rows)
+    # 11 records have an arrival time: ids 0, 2, 3 and 4-11
+    requests = {r["window_start"]: r["value"] for r in rows
+                if r["counter_id"] == "requests"}
+    assert requests == {base: 2, base + 60_000: 3, base + 120_000: 3,
+                        base + 180_000: 3}
+
+    # record for record too, bad lines included; only the stream numbers them
+    records = open_shard_records(spark, str(d))
+    plan = records._jdf.queryExecution().executedPlan().toString()
+    assert "BatchScan" not in plan and "FileScan text" in plan
+    streamed: list = []
+    drain(
+        open_shard_records(spark, str(d), streaming=True)
+        .drop("sequence_number")
+        .writeStream.foreachBatch(lambda b, _e: streamed.extend(b.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
+    got = sorted(map(str, records.collect()))
+    assert got == sorted(map(str, streamed)) and len(got) == 15
+
+
 def _source_tasks(spark, jobs) -> int:
-    """Tasks of ``jobs`` that ran a stage reading the kinesis_replay scan."""
+    """Tasks of ``jobs`` that ran a stage reading the shard files' text scan."""
     sc = spark.sparkContext
     tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
     graph = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph
@@ -304,16 +387,16 @@ def _source_tasks(spark, jobs) -> int:
     for j in jobs:
         for s in tracker.getJobInfo(j).stageIds:
             dot = graph.makeDotFile(store.operationGraphForStage(s))
-            if "BatchScan kinesis_replay" in dot:
+            if "Scan text" in dot:
                 n += tracker.getStageInfo(s).numCompletedTasks
     return n
 
 
 def test_cli_fanout_scans_the_source_once(spark, tmp_path, spark_jobs):
     # 4 routed counters on one window share one aggregate over one scan:
-    # the union reads only its checkpoint, and the CLI run is 5 jobs (the
+    # the union reads only its checkpoint, and the CLI run is 3 jobs (the
     # aggregate's map stage over the scan, its reduce into the checkpoint,
-    # and the sorted output's sample, map and result), not 7
+    # and the sorted output's one partition), not 7
     from kinesis_data_counter_spark.__main__ import _load_input, build_parser
     from kinesis_data_counter_spark.config import Config
     from kinesis_data_counter_spark.operators.counter import (
@@ -329,10 +412,10 @@ def test_cli_fanout_scans_the_source_once(spark, tmp_path, spark_jobs):
         build_parser().get_default("stream_arn"),
     )
     plan = union_counter_results(frames)._jdf.queryExecution().executedPlan()
-    assert "BatchScan" not in plan.toString()
+    assert "FileScan" not in plan.toString()
 
     buf = io.StringIO()
     jobs, rc = spark_jobs(lambda: main(["--path", d, "--config", str(cfg)], out=buf))
     assert rc == 0 and len(buf.getvalue().splitlines()) == 4 * 5
-    assert len(jobs) == 5
-    assert 0 < _source_tasks(spark, jobs) <= 3  # one task per shard
+    assert len(jobs) == 3
+    assert 0 < _source_tasks(spark, jobs) <= 3  # at most one task per shard

@@ -82,6 +82,9 @@ def test_bench_emits_one_json_line_at_tiny_sf():
         SPARK_BENCH_LOAD_WAIT="0",
         SPARK_BENCH_FORCE="1",
     )
+    history = os.path.join(REPO, "BENCH_LOCAL.json")
+    with open(history, "rb") as fh:
+        before = fh.read()
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],
         capture_output=True,
@@ -91,6 +94,9 @@ def test_bench_emits_one_json_line_at_tiny_sf():
         cwd=REPO,
     )
     assert out.returncode == 0, out.stderr[-2000:]
+    # a forced line is never compared, so the tracked history is untouched
+    with open(history, "rb") as fh:
+        assert fh.read() == before
     json_lines = [
         ln for ln in out.stdout.replace("\r", "\n").splitlines()
         if ln.startswith("{")

@@ -158,6 +158,21 @@ def test_merge_filters_foreign_counters(spark):
     assert merge_partials(mixed, spec_a).collect()[0].value == 100
 
 
+def test_merge_partials_equals_build_counter(spark):
+    # the level-2 merge emits build_counter's rows, event_source_arn first
+    df = access_log(spark, 100, 2000, shards=3)
+    spec = CounterSpec(id="r", counter_type="count", target_column="request_id",
+                       window="10 seconds", input_stream_arn=ARN).validate()
+    merged = merge_partials(
+        partial_counter(df, spec, ts_col="time", shard_col="shard"), spec)
+    single = build_counter(df, spec, ts_col="time")
+    # names and types; a merged sum is nullable where a count is not
+    assert [(f.name, f.dataType) for f in merged.schema] == [
+        (f.name, f.dataType) for f in single.schema]
+    assert sorted(merged.collect()) == sorted(single.collect())
+    assert len(single.collect()) == 6
+
+
 def test_shard_id_column_presence(spark):
     df = access_log(spark, 10, 100, shards=2)
     spec = CounterSpec(id="c", counter_type="count", target_column="request_id",

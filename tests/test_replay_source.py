@@ -297,6 +297,7 @@ def test_record_batches_slice_and_flush(tmp_path):
     p = str(tmp_path / "shard-000.jsonl")
     lines = [json.dumps({"__pk": f"u{i}", "__arrival_ms": 1000 * i, "v": i}) for i in range(10)]
     lines[4] = "not json at all"  # corrupt record: flows through, null pk/arrival
+    lines[5] = json.dumps({"__pk": "u5", "v": 5})  # no arrival time
     lines[7] = ""  # blank: skipped entirely (no sequence emitted)
     with open(p, "w") as f:
         f.write("\n".join(lines) + "\n")
@@ -313,6 +314,7 @@ def test_record_batches_slice_and_flush(tmp_path):
     arr = tbl.column("approximate_arrival").to_pylist()
     assert arr[1].timestamp() == 3.0  # __arrival_ms=3000 -> epoch 3s
     assert arr[2] is None  # corrupt line: no arrival, so windowing drops it
+    assert arr[3] is None and pks[3] == "u5"  # no __arrival_ms: not epoch 0
 
     # flush boundary: >_BATCH_ROWS records split into multiple batches
     old = rs._BATCH_ROWS
