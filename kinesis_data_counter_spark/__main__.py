@@ -103,17 +103,9 @@ def main(argv: list[str] | None = None, out: io.TextIOBase | None = None) -> int
     args = parser.parse_args(argv)
     out = out or sys.stdout
 
-    from kinesis_data_counter_spark.operators.counter import (
-        assemble_counters,
-        build_counter,
-        union_counter_results,
-    )
     from kinesis_data_counter_spark.session import get_spark
-    from kinesis_data_counter_spark.streaming.sinks import console_writer
 
-    window = parse_window(args.window)
     arn = args.stream_arn
-    cfg = None
     if args.config:
         from kinesis_data_counter_spark import __version__
 
@@ -124,15 +116,28 @@ def main(argv: list[str] | None = None, out: io.TextIOBase | None = None) -> int
         except ConfigError as e:
             print(f"error: {e}", file=sys.stderr)
             return 2
+        specs = cfg.counters_for_source(arn)
+        if not specs:
+            print("error: no counter in the config matches "
+                  f"--stream-arn {arn}", file=sys.stderr)
+            return 2
+    else:
+        if args.target_column is None and args.target_expr is None:
+            args.target_column = "*"
+        specs = [CounterSpec(
+            id=args.counter_id,
+            counter_type=args.counter_type,
+            target_column=args.target_column,
+            target_expr=args.target_expr,
+            jq_expr=args.jq_expr,
+            window=parse_window(args.window),
+            input_stream_arn=arn,
+        ).validate()]
     if args.follow:
         # reference CLI validation, main.go:113-116, on every window the
         # stream runs: each routed counter's, or --window's
-        windows = (
-            [spec.window for spec in cfg.counters_for_source(arn)]
-            if cfg is not None else [window]
-        )
         try:
-            minutes = max(map(window_minutes, windows), default=0)
+            minutes = max(window_minutes(spec.window) for spec in specs)
         except ValueError as e:
             print(f"error: {e}", file=sys.stderr)
             return 2
@@ -143,68 +148,46 @@ def main(argv: list[str] | None = None, out: io.TextIOBase | None = None) -> int
     spark = get_spark(app_name="kdc-cli")
     spark.sparkContext.setLogLevel("ERROR")
 
-    if cfg is not None:
-        if args.follow:
-            # streaming fan-out ≈ the reference's goroutine-per-counter
-            # (counter.go:176-196): each matching counter drains the same
-            # bounded stream through its own query; results union like
-            # resp.MergeInto
-            from kinesis_data_counter_spark.streaming.runner import (
-                run_counter_stream_once,
-            )
+    if args.follow:
+        # streaming fan-out ≈ the reference's goroutine-per-counter
+        # (counter.go:176-196): each routed counter drains the same bounded
+        # stream through its own query; each counter's rows serialize to
+        # their own JSON objects before the union, like resp.MergeInto
+        # of per-counter outputs. One sorted partition: config order, then
+        # line.
+        from functools import reduce
 
-            frames = {
-                spec.id: run_counter_stream_once(
-                    spark, args.path, spec, ts_col=args.ts_col,
-                    event_source_arn=arn,
-                )
-                for spec in cfg.counters_for_source(arn)
-            }
-        else:
-            frames = assemble_counters(
-                _load_input(spark, args.path, args.ts_col), cfg, arn, ts_col=args.ts_col
-            )
-        if not frames:
-            print("error: no counter in the config matches "
-                  f"--stream-arn {arn}", file=sys.stderr)
-            return 2
-        result = union_counter_results(frames)
+        from pyspark.sql import DataFrame
+        from pyspark.sql import functions as F
+
+        from kinesis_data_counter_spark.streaming.runner import run_counter_stream_once
+        from kinesis_data_counter_spark.streaming.sinks import serialized_lines
+
+        lines = reduce(DataFrame.union, [
+            serialized_lines(run_counter_stream_once(
+                spark, args.path, spec, ts_col=args.ts_col, event_source_arn=arn,
+            )).select(F.lit(k).alias("__k"), "line")
+            for k, spec in enumerate(specs)
+        ]).coalesce(1).sortWithinPartitions("__k", "line")
+        rows = lines.collect()
     else:
-        if args.target_column is None and args.target_expr is None:
-            args.target_column = "*"
-        spec = CounterSpec(
-            id=args.counter_id,
-            counter_type=args.counter_type,
-            target_column=args.target_column,
-            target_expr=args.target_expr,
-            jq_expr=args.jq_expr,
-            window=window,
-            input_stream_arn=arn,
-        ).validate()
-        if args.follow:
-            from kinesis_data_counter_spark.streaming.runner import (
-                run_counter_stream_once,
-            )
+        from kinesis_data_counter_spark.operators.counter import counter_lines
+        from kinesis_data_counter_spark.sqltext import Statement
 
-            result = run_counter_stream_once(spark, args.path, spec, ts_col=args.ts_col)
-        else:
-            result = build_counter(
-                _load_input(spark, args.path, args.ts_col), spec, ts_col=args.ts_col
-            )
-
-    # at most windows × counters rows: one sorted partition is one job,
-    # where a range sort samples, shuffles and collects in three
-    console_writer(out)(
-        result.coalesce(1).sortWithinPartitions(*result.columns[:2]), 0
-    )
+        with Statement(spark) as q:
+            records = _load_input(q, args.path, args.ts_col)
+            rows = counter_lines(q, records, specs, arn, ts_col=args.ts_col).collect()
+    for row in rows:
+        print(row.line, file=out)
     return 0
 
 
-def _load_input(spark, path: str, ts_col: str):
-    """Load the input through the same nanos-aware path as the fixtures.
+def _load_input(q, path: str, ts_col: str) -> str:
+    """The input's records as a SQL query bound on ``q``, loaded through
+    the same nanos-aware path as the fixtures.
 
     A directory of ``shard-*.jsonl`` files is read as a batch of parsed
-    records (``open_shard_records``: one JVM text scan and one JSON decode
+    records (``shard_records_sql``: one JVM text scan and one JSON decode
     per record, body fields lifted to columns) — the CLI then points at a
     (simulated) stream exactly like the reference's ``-stream`` flag, not
     just at parquet.
@@ -214,17 +197,16 @@ def _load_input(spark, path: str, ts_col: str):
     from kinesis_data_counter_spark.session import load_tables
     from kinesis_data_counter_spark.sources.replay_source import (
         is_shard_dir,
-        open_shard_records,
+        shard_records_sql,
     )
 
     if is_shard_dir(path):
-        return open_shard_records(spark, path, streaming=False, ts_col=ts_col)
+        return shard_records_sql(q, path, ts_col=ts_col)
     d, base = os.path.dirname(path), os.path.basename(path)
     name = base.removesuffix(".parquet")
-    tables = load_tables(spark, d, (name,))
-    if name in tables:
-        return tables[name]
-    return spark.read.parquet(path)
+    tables = load_tables(q.spark, d, (name,))
+    df = tables[name] if name in tables else q.spark.read.parquet(path)
+    return f"SELECT * FROM {q.rel(df)}"
 
 
 if __name__ == "__main__":  # pragma: no cover

@@ -11,13 +11,15 @@ Round 3 widens the compiled subset to the common gojq surface beyond that:
 **pipelines** (``stage | stage``), **select(...)** filters with
 comparisons / ``and`` / ``or``, **arithmetic** (``+ - * / %`` with unary
 minus and parentheses), and **string interpolation** (``"\\(.a)-\\(.b)"``) —
-all compiled to Column expressions, so the transform stays JVM-side and
-codegen-eligible instead of a per-row Python jq interpreter. Semantics are
-pinned by differential tests against the real jq binary
+all compiled to Spark SQL text (``jq_sql``: one expression per program,
+its literals bound as parameters), so the transform stays JVM-side and
+codegen-eligible instead of a per-row Python jq interpreter. The CLI's
+statement and ``apply_jq`` use the same text. Semantics are pinned by
+differential tests against the real jq binary
 (tests/test_jq_differential.py).
 
 Multi-output iteration ``.path[]`` over an array-of-objects field is also
-compiled — to ``explode``, which IS the Spark shape of gojq's 0..n-outputs
+compiled — to ``flatten``, the array shape of gojq's 0..n-outputs
 iterator loop (counter.go:439-466). NULL arrays iterate to nothing, i.e.
 the error-suppressing ``.path[]?`` form of jq (a per-row runtime error has
 no sane distributed equivalent).
@@ -33,7 +35,7 @@ subset: it runs the dependency-free pure-Python mini-jq interpreter
 try/catch, ~45 builtins, differential-pinned against the real jq binary)
 via ``mapInPandas``, preferring the optional ``jq`` Python binding when
 installed. The compiled subset stays the hot path: it is JVM-side
-columns, the interpreter is per-row Python for output shaping.
+SQL, the interpreter is per-row Python for output shaping.
 """
 
 from __future__ import annotations
@@ -42,9 +44,10 @@ import json
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from kinesis_data_counter_spark.sqltext import Statement, ident
 
 
 class JqUnsupported(ValueError):
@@ -129,16 +132,9 @@ def _find_value_end(s: str) -> int:
     return len(s)
 
 
-def jq_field_to_column(f: JqField) -> Column:
-    if f.path is None:
-        return F.lit(f.literal).alias(f.name)
-    col = F.col(".".join(f.path))
-    return col.alias(f.name)
-
-
 # ---------------------------------------------------------------------------
 # Widened subset: pipelines, select, arithmetic, string interpolation
-# (tokenizer → recursive-descent parser → AST → Column compiler + a pure-dict
+# (tokenizer → recursive-descent parser → AST → SQL compiler + a pure-dict
 # evaluator so the Lambda-handler per-record path stays in lockstep)
 # ---------------------------------------------------------------------------
 
@@ -461,7 +457,12 @@ def parse_jq_program(program: str) -> list:
     return _Parser(_tokenize(src)).parse_program()
 
 
-# --- Column compiler -------------------------------------------------------
+# --- SQL compiler ----------------------------------------------------------
+
+# The lambda variable bound to the current object in each stage's
+# higher-order function. Stage bodies reference only it and bound
+# parameters, never a column, so it shadows nothing.
+_OBJ = "o"
 
 
 def _schema_subtype(schema, parts: tuple[str, ...]):
@@ -477,109 +478,99 @@ def _schema_subtype(schema, parts: tuple[str, ...]):
     return cur
 
 
-def _resolve_path(parts: tuple[str, ...], schema) -> Column:
-    """``.a.b.c`` → Column; missing fields compile to NULL (jq semantics
-    for absent object keys)."""
+def _resolve_path(parts: tuple[str, ...], schema) -> str:
+    """``.a.b.c`` → a field path of the current object; a missing field
+    compiles to NULL (jq semantics for absent object keys)."""
     if _schema_subtype(schema, parts) is None:
-        return F.lit(None)
-    col = F.col(parts[0])
-    for p in parts[1:]:
-        col = col.getField(p)
-    return col
+        return "NULL"
+    return _OBJ + "".join("." + ident(p) for p in parts)
 
 
-def _truthy(c: Column) -> Column:
+def _truthy(sql: str) -> str:
     # jq: null and false are falsy; everything else would be truthy, but the
     # compiled subset only admits boolean-typed conditions, so coalescing
     # null→false is the whole rule
-    return F.coalesce(c, F.lit(False))
+    return f"coalesce({sql}, false)"
 
 
-def _compile_expr(ast, schema) -> Column:
+def _compile_expr(ast, schema, q: Statement) -> str:
+    """SQL text of one expression over the current object (a struct of
+    ``schema``); every literal is a parameter bound on ``q``."""
     kind = ast[0]
     if kind == "lit":
-        return F.lit(ast[1])
+        return q.lit(ast[1])
     if kind == "path":
         return _resolve_path(ast[1], schema)
     if kind == "neg":
-        return -_compile_expr(ast[1], schema)
+        return f"(- {_compile_expr(ast[1], schema, q)})"
     if kind == "interp":
         parts = [
-            F.lit(p) if isinstance(p, str)
-            else _compile_expr(p, schema).cast("string")
+            q.lit(p) if isinstance(p, str)
+            else f"CAST({_compile_expr(p, schema, q)} AS STRING)"
             for p in ast[1]
         ]
-        return F.concat(*parts) if parts else F.lit("")
+        return f"concat({', '.join(parts)})" if parts else q.lit("")
     if kind == "bin":
-        op, ln, rn = ast[1], ast[2], ast[3]
-        left, right = _compile_expr(ln, schema), _compile_expr(rn, schema)
+        op = ast[1]
+        left, right = _compile_expr(ast[2], schema, q), _compile_expr(ast[3], schema, q)
         if op == "==":
-            return left.eqNullSafe(right)  # jq: null == null is true
+            return f"({left} <=> {right})"  # jq: null == null is true
         if op == "!=":
-            return ~left.eqNullSafe(right)
-        if op == "<":
-            return left < right
-        if op == "<=":
-            return left <= right
-        if op == ">":
-            return left > right
-        if op == ">=":
-            return left >= right
-        if op == "and":
-            return _truthy(left) & _truthy(right)
-        if op == "or":
-            return _truthy(left) | _truthy(right)
-        if op == "+":
-            return left + right
-        if op == "-":
-            return left - right
-        if op == "*":
-            return left * right
+            return f"(NOT ({left} <=> {right}))"
+        if op in ("and", "or"):
+            return f"({_truthy(left)} {op.upper()} {_truthy(right)})"
         if op == "/":
             # jq division is exact: ints divide to floats when needed
-            return left.cast("double") / right.cast("double")
-        if op == "%":
-            return left % right
+            return f"(CAST({left} AS DOUBLE) / CAST({right} AS DOUBLE))"
+        if op in ("<", "<=", ">", ">=", "+", "-", "*", "%"):
+            return f"({left} {op} {right})"
     raise JqUnsupported(f"cannot compile node: {ast!r}")  # pragma: no cover
 
 
-def apply_jq(df: DataFrame, program: str | None) -> DataFrame:
-    """Apply a compiled jq-subset program; identity when None/'.'.
+def jq_sql(program: str | None, obj: str, schema: T.StructType, q: Statement) -> str | None:
+    """SQL text of the array of objects ``program`` emits for one input
+    object ``obj`` (SQL text of a struct of ``schema``); None for identity.
 
-    Pipelines compile stage-by-stage: ``select`` → ``filter``, object
-    construction → ``select`` projection, ``.path`` (struct-typed) →
-    re-rooting. Everything stays a Column expression — one narrow
-    projection/filter chain that Catalyst collapses into the enclosing
-    plan, with no Python in the row loop.
+    Each stage is one higher-order function over the current objects:
+    ``select`` → ``filter``, object construction → ``transform`` into a
+    ``named_struct``, ``.path`` (struct-typed) → ``transform`` re-rooting,
+    ``.path[]`` (array of objects) → ``flatten``: gojq's iterator loop
+    (counter.go:439-466), 0..n objects per input, where a NULL array
+    iterates to nothing. The pipeline is one expression, so it runs inside
+    whatever projection holds it, with no Python in the row loop.
     """
-    if not program:
-        return df
-    stages = parse_jq_program(program)
+    stages = [st for st in parse_jq_program(program) if st[0] != "identity"] if program else []
+    if not stages:
+        return None
+    arr = f"array({obj})"
     for st in stages:
         kind = st[0]
-        if kind == "identity":
-            continue
         if kind == "select":
-            df = df.filter(_truthy(_compile_expr(st[1], df.schema)))
+            cond = _truthy(_compile_expr(st[1], schema, q))
+            arr = f"filter({arr}, {_OBJ} -> {cond})"
         elif kind == "obj":
-            df = df.select(
-                *[_compile_expr(e, df.schema).alias(k) for k, e in st[1]]
+            pairs = ", ".join(
+                f"{q.lit(k)}, {_compile_expr(e, schema, q)}" for k, e in st[1]
             )
+            arr = f"transform({arr}, {_OBJ} -> named_struct({pairs}))"
+            # later stages only ask whether a field exists and whether it
+            # is an object or an array of objects: only a path value can be
+            schema = T.StructType([
+                T.StructField(k, (e[0] == "path" and _schema_subtype(schema, e[1]))
+                              or T.NullType())
+                for k, e in st[1]
+            ])
         elif kind == "path":
-            sub = _schema_subtype(df.schema, st[1])
+            sub = _schema_subtype(schema, st[1])
             if not isinstance(sub, T.StructType):
                 raise JqUnsupported(
                     f"path stage {'.'.join(st[1])!r} must be struct-typed "
                     "(scalar pipelines unsupported)"
                 )
-            root = _resolve_path(st[1], df.schema)
-            df = df.select(*[root.getField(f.name).alias(f.name) for f in sub.fields])
+            arr = f"transform({arr}, {_OBJ} -> {_resolve_path(st[1], schema)})"
+            schema = sub
         elif kind == "iterate":
-            # multi-output iteration (gojq's iterator loop,
-            # counter.go:439-466) IS Spark's explode: one output record
-            # per array element, zero for an empty/NULL array. Elements
-            # must be objects so the pipeline stays record-shaped.
-            sub = _schema_subtype(df.schema, st[1])
+            sub = _schema_subtype(schema, st[1])
             if not isinstance(sub, T.ArrayType) or not isinstance(
                 sub.elementType, T.StructType
             ):
@@ -587,9 +578,24 @@ def apply_jq(df: DataFrame, program: str | None) -> DataFrame:
                     f"iterate stage {'.'.join(st[1])!r}[] must be an "
                     "array of objects"
                 )
-            root = _resolve_path(st[1], df.schema)
-            df = df.select(F.explode(root).alias("__e")).select("__e.*")
-    return df
+            path = _resolve_path(st[1], schema)
+            arr = f"flatten(transform({arr}, {_OBJ} -> coalesce({path}, array())))"
+            schema = sub.elementType
+    return arr
+
+
+def apply_jq(df: DataFrame, program: str | None) -> DataFrame:
+    """Apply a compiled jq-subset program; identity when None/'.'.
+
+    The program compiles to one ``jq_sql`` expression over each row as an
+    object, whose 0..n output objects ``inline`` into rows: one generator
+    in one projection, with the program's literals bound as parameters.
+    """
+    with Statement(df.sparkSession) as q:
+        arr = jq_sql(program, "struct(*)", df.schema, q)
+        if arr is None:
+            return df
+        return q.sql(f"SELECT inline({arr}) FROM {q.rel(df)}")
 
 
 # --- dict evaluator (Lambda-handler per-record path) -----------------------
@@ -694,7 +700,7 @@ def _eval_expr(ast, obj):
         if op == "or":
             return _eval_truthy(ln) or _eval_truthy(rn)
         if ln is None or rn is None:
-            return None  # SQL-style null propagation, matching the Columns
+            return None  # SQL-style null propagation, matching the compiled SQL
         if op == "<":
             return ln < rn
         if op == "<=":

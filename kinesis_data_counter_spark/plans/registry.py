@@ -158,8 +158,8 @@ def _q_counter_jq_reshape(spark, sf_dir):
 
 def _q_counter_jq_select(spark, sf_dir):
     # F8 widened (VERDICT r2 item 3): a pipe of select + object construction
-    # with arithmetic and string interpolation, compiled to filter+projection
-    # Columns (jq.py::apply_jq) — busy hours only, renamed and rescaled.
+    # with arithmetic and string interpolation, compiled to one SQL
+    # expression (jq.py::jq_sql) — busy hours only, renamed and rescaled.
     # Differential parity with /usr/bin/jq is pinned in
     # tests/test_jq_differential.py; here the DuckDB oracle replays the
     # whole counter+transform pipeline.
@@ -179,7 +179,7 @@ def _q_counter_jq_select(spark, sf_dir):
 def _q_counter_jq_iterate(spark, sf_dir):
     # F8 widened further (round 3): multi-output '.path[]' iteration —
     # gojq's 0..n-outputs iterator loop (counter.go:439-466) compiled to
-    # explode. Hourly per-type counts are packed as an array on each window
+    # flatten. Hourly per-type counts are packed as an array on each window
     # row, then the jq pipeline un-nests, filters, and reshapes them; the
     # oracle computes the flat equivalent directly.
     from kinesis_data_counter_spark.jq import apply_jq
@@ -454,8 +454,9 @@ def _q_theta_set_ops_users(spark, sf_dir):
 
 
 def _q_counter_multi_fanout(spark, sf_dir):
-    # A7: several counters over one shared (checkpointed) aggregate of one
-    # scan, results unioned
+    # A7: several counters over one shared aggregate of one scan,
+    # checkpointed by assemble_counters so the unioned per-counter frames
+    # read it once (the CLI's counter_lines needs no checkpoint)
     from kinesis_data_counter_spark.config import Config
     from kinesis_data_counter_spark.operators.counter import (
         assemble_counters,

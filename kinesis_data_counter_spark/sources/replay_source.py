@@ -58,6 +58,7 @@ from __future__ import annotations
 
 import glob
 import json
+import math
 import os
 from collections.abc import Iterator, Sequence
 
@@ -111,6 +112,22 @@ _ARROW_SCHEMA = pa.schema(
 _BATCH_ROWS = 4096  # records per Arrow batch (≈ 4 GetRecords calls)
 
 
+def _arrival_ms(value) -> int | None:
+    """An ``__arrival_ms`` value as ``open_shard_records`` decodes it: a
+    JSON number or a numeric string, truncated to whole milliseconds;
+    anything else (a boolean, an object, text) is NULL."""
+    if isinstance(value, str):
+        try:
+            value = float(value)
+        except ValueError:
+            return None
+    if isinstance(value, bool) or not isinstance(value, (int, float)):
+        return None
+    if not math.isfinite(value) or not -(2**63) <= value < 2**63:
+        return None
+    return int(value)
+
+
 def _record_batches(
     shard: str, path: str, start: int, end: int | None
 ) -> Iterator[pa.RecordBatch]:
@@ -147,13 +164,13 @@ def _record_batches(
             pk, arrival_us = None, None
             try:
                 obj = json.loads(line)
-                if isinstance(obj, dict):
-                    pk = obj.get("__pk")
-                    arrival_ms = obj.get("__arrival_ms")
-                    if arrival_ms is not None:
-                        arrival_us = int(arrival_ms) * 1000
             except ValueError:
-                pass
+                obj = None
+            if isinstance(obj, dict):
+                pk = obj.get("__pk")
+                arrival_ms = _arrival_ms(obj.get("__arrival_ms"))
+                if arrival_ms is not None:
+                    arrival_us = arrival_ms * 1000
             # a line that is not a JSON object, or has no __arrival_ms,
             # keeps its data for the S4 bad-record router but has no
             # arrival time: windowing on it
@@ -455,76 +472,102 @@ def is_shard_dir(path: str) -> bool:
 
 
 def open_shard_records(spark, path: str, streaming: bool = False, ts_col: str = "ts"):
-    """Read a shard dir as parsed event records (the CLI/stream entry shape).
+    """Read a shard dir as parsed event records (the CLI/stream entry shape):
+    ``shard_records_sql`` as a DataFrame."""
+    from kinesis_data_counter_spark.sqltext import Statement
+
+    with Statement(spark) as q:
+        return q.sql(shard_records_sql(q, path, streaming, ts_col))
+
+
+def shard_records_sql(q, path: str, streaming: bool = False, ts_col: str | None = "ts") -> str:
+    """SQL query of a shard dir's parsed event records, bound on ``q``.
 
     Each record's JSON is decoded ONCE, on the JVM, by one typed, codegen'd
     ``from_json`` (the reference decodes a record once and updates every
     counter from it, counter.go:170-204). The body schema comes from the
-    first record, like the reference's schemaless per-record decode
-    (counter.go:241-252), but resolved at plan time; the envelope keys
-    ``__pk`` → ``partition_key`` and ``__arrival_ms`` (an integer or a
-    float) → ``approximate_arrival`` are lifted whether or not that record
-    has them. A line that is not a JSON object, or an object with no
-    ``__arrival_ms``, has a NULL arrival time, so windowing on it drops the
-    record. ``ts_col`` falls back to the arrival time when the body has no
-    such field — the reference's arrival-time windowing (run.go:107).
+    first record that is a JSON object, like the reference's schemaless
+    per-record decode (counter.go:241-252), but resolved at plan time; the
+    envelope keys ``__pk`` → ``partition_key`` and ``__arrival_ms`` (an
+    integer, a float or a numeric string, read like the source's
+    ``_arrival_ms``) → ``approximate_arrival`` are lifted whether or not
+    that record has them. A line that is not a JSON object, or an object
+    with no ``__arrival_ms``, has a NULL arrival time, so windowing on it
+    drops the record (counter.go:244-248). ``ts_col`` falls back to the
+    arrival time when the body has no such field — the reference's
+    arrival-time windowing (run.go:107).
 
-    The two modes differ only in the source. Batch reads the shard files
-    with Spark's text scan (``shard_id`` is the file name); its frame has
-    no ``sequence_number`` — no batch consumer reads one and a text scan
-    has no line index. Streaming tails per-shard offsets through the
+    The two modes differ only in the wire. Batch scans the shard files
+    with Spark's text source (``shard_id`` is the file name); its records
+    have no ``sequence_number`` — no batch consumer reads one and a text
+    scan has no line index. Streaming tails per-shard offsets through the
     ``kinesis_replay`` source and keeps ``sequence_number``.
     """
-    from pyspark.sql import functions as F
+    from kinesis_data_counter_spark.sqltext import ident
 
     if streaming:
-        spark.dataSource.register(KinesisReplayDataSource)
-        wire = (
-            spark.readStream.format("kinesis_replay").option("path", path).load()
-            .select("shard_id", "sequence_number", "data")
-        )
+        q.spark.dataSource.register(KinesisReplayDataSource)
+        stream = q.spark.readStream.format("kinesis_replay").option("path", path).load()
+        wire = f"SELECT shard_id, sequence_number, data FROM {q.rel(stream)}"
+        keep = ["shard_id", "sequence_number"]
     else:
+        # a view of a file relation hides its _metadata: select it first
+        text = q.spark.read.text(os.path.join(path, "shard-*.jsonl")).select("value", "_metadata")
+        shard_id = f"regexp_replace(_metadata.file_name, {q.lit(_SHARD_SUFFIX)}, '')"
         wire = (
-            spark.read.text(os.path.join(path, "shard-*.jsonl"))
-            .where(F.col("value").rlike(r"\S"))  # the source skips blank lines
-            .select(
-                F.regexp_replace("_metadata.file_name", r"\.jsonl$", "").alias("shard_id"),
-                F.col("value").alias("data"),
-            )
+            f"SELECT {shard_id} AS shard_id, value AS data FROM {q.rel(text)} "
+            f"WHERE value RLIKE {q.lit(_NOT_BLANK)}"  # the source skips blank lines
         )
-    keep = [c for c in wire.columns if c != "data"]
+        keep = ["shard_id"]
+    sample = _record_sample(path)
+    envelope = [k for k in sample if k.startswith("__")]
+    columns = [*keep, "partition_key", "approximate_arrival",
+               *(k for k in sample if not k.startswith("__"))]
+    keep_sql = ", ".join(map(ident, keep))
+    # a numeric arrival parses in the typed from_json; only a record
+    # without one (a numeric string, or none) reads it again as text
+    arrival = (
+        f"coalesce(__arrival_ms, try_cast(get_json_object(__line, {q.lit('$.__arrival_ms')})"
+        " AS DOUBLE))"
+    )
     # the parsed struct's fields come out of a generator, so a filter on
     # one of them (windowing's isnotnull on the arrival time) stays above
     # the one from_json instead of being pushed below it as a second parse
-    parsed = wire.select(*keep, F.inline_outer(F.array(
-        F.from_json("data", F.schema_of_json(F.lit(_record_sample(path)))))))
-    body_cols = [c for c in parsed.columns[len(keep):] if not c.startswith("__")]
-    out = parsed.select(
-        *keep,
-        F.col("__pk").alias("partition_key"),
-        F.timestamp_millis(F.col("__arrival_ms").cast("long")).alias(
-            "approximate_arrival"
-        ),
-        *body_cols,
+    text = (
+        f"SELECT {keep_sql}, __pk AS partition_key, "
+        f"timestamp_millis(try_cast({arrival} AS BIGINT)) AS approximate_arrival, "
+        f"* EXCEPT ({', '.join(map(ident, [*keep, '__line', *envelope]))}) "
+        f"FROM (SELECT {keep_sql}, data AS __line, inline_outer(array(from_json(data, "
+        f"schema_of_json({q.lit(json.dumps(sample))})))) FROM ({wire}))"
     )
-    if ts_col is not None and ts_col not in out.columns:
-        out = out.withColumn(ts_col, F.col("approximate_arrival"))
-    return out
+    if ts_col is not None and ts_col not in columns:
+        text = f"SELECT *, approximate_arrival AS {ident(ts_col)} FROM ({text})"
+    return text
 
 
-# Envelope keys forced into the schema sample: a STRING partition key and a
-# DOUBLE arrival time, which parses an integer or a float millisecond value.
+_SHARD_SUFFIX = r"\.jsonl$"
+_NOT_BLANK = r"\S"
+
+# Envelope keys forced into the schema sample: a STRING partition key and
+# a DOUBLE arrival time, which parses an integer or a float millisecond
+# value; ``shard_records_sql`` reads a numeric string in a second step.
 _ENVELOPE_SAMPLE = {"__pk": "", "__arrival_ms": 0.5}
 
 
-def _record_sample(path: str) -> str:
-    """The dir's first record, which must be a JSON object, with the
-    envelope keys forced in: the sample the record schema is inferred from
-    (no Spark job). Before any record, the envelope alone."""
+def _record_sample(path: str) -> dict:
+    """The dir's first record that is a JSON object, with the envelope
+    keys forced in: the sample the record schema is inferred from (no
+    Spark job). Lines before it that are not objects are skipped (the
+    decode drops them per record); with no object at all, the envelope
+    alone."""
     for p in _shard_files(path).values():
         with open(p, "r", encoding="utf-8") as f:
-            line = next((ln.strip() for ln in f if ln.strip()), None)
-        if line is not None:
-            return json.dumps({**json.loads(line), **_ENVELOPE_SAMPLE})
-    return json.dumps(_ENVELOPE_SAMPLE)
+            for line in f:
+                try:
+                    obj = json.loads(line)
+                except ValueError:
+                    continue
+                if isinstance(obj, dict):
+                    return {**obj, **_ENVELOPE_SAMPLE}
+    return dict(_ENVELOPE_SAMPLE)
 

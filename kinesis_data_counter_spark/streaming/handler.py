@@ -43,7 +43,11 @@ from pyspark.sql import functions as F
 
 from kinesis_data_counter_spark.config import COUNT, Config, CounterSpec
 from kinesis_data_counter_spark.jq import eval_jq_object
-from kinesis_data_counter_spark.operators.counter import counter_state, finalize_state
+from kinesis_data_counter_spark.operators.counter import (
+    counter_state,
+    finalize_state,
+    target_types,
+)
 
 
 @dataclass
@@ -102,14 +106,22 @@ def _event_frame(spark: SparkSession, clean: list[str]) -> DataFrame:
 
 
 def _one_row(
-    spark: SparkSession, cols: dict[str, Column], frame: DataFrame | None = None
+    spark: SparkSession,
+    cols: dict[str, Column],
+    finals: dict[str, str],
+    frame: DataFrame | None = None,
 ) -> dict[str, Any]:
     """Evaluate named columns as ONE row in at most one Spark job: a global
-    aggregate over ``frame``, or a literal fold over a one-row range."""
+    aggregate over ``frame``, or a literal fold over a one-row range; then
+    ``finals``, SQL over those columns (the HLL estimates), in the same
+    row."""
     if not cols:
         return {}
     src = frame if frame is not None else spark.range(0, 1, 1, 1)
-    return src.select(*(c.alias(k) for k, c in cols.items())).collect()[0].asDict()
+    row = src.select(*(c.alias(k) for k, c in cols.items()))
+    if finals:
+        row = row.selectExpr("*", *(f"{sql} AS {k}" for k, sql in finals.items()))
+    return row.collect()[0].asDict()
 
 
 def _hll_union(sketches: list[bytes], new: Column | None = None) -> Column:
@@ -224,23 +236,25 @@ def _process_input(
     frame = _event_frame(spark, clean) if clean else None
 
     # ONE job: partial counts, carried ⊕ new sketches and final estimates
-    # (with no decodable record, a carried estimate is a literal fold)
+    # (with no decodable record, a carried estimate is a literal fold);
+    # every target type comes from one schema read of the records
     cols: dict[str, Column] = {"n": F.count(F.lit(1))} if clean else {}
-    for i, spec in enumerate(counters):
-        new = counter_state(frame, spec) if clean else None
+    finals: dict[str, str] = {}
+    types = target_types(frame, counters) if clean else [None] * len(counters)
+    for i, (spec, dtype) in enumerate(zip(counters, types)):
+        new = F.expr(counter_state(spec, dtype)) if clean else None
         if spec.counter_type == COUNT:
             if new is not None:
                 cols[f"c{i}"] = new
             continue
         prior = _state_for(resp.state, spec, event.shard_id).get("base64_hll")
-        if new is None and not prior:
+        emit = event.is_final_invoke_for_window and not spec.aggregate_stream_arn
+        if new is None and not (prior and emit):
             continue
-        sketch = _hll_union([base64.b64decode(prior)] if prior else [], new)
-        if new is not None:
-            cols[f"c{i}"] = sketch
-        if event.is_final_invoke_for_window and not spec.aggregate_stream_arn:
-            cols[f"v{i}"] = finalize_state(spec, sketch)
-    vals = _one_row(spark, cols, frame)
+        cols[f"c{i}"] = _hll_union([base64.b64decode(prior)] if prior else [], new)
+        if emit:
+            finals[f"v{i}"] = finalize_state(spec, f"c{i}")
+    vals = _one_row(spark, cols, finals, frame)
     if clean and vals["n"] != len(clean):
         raise ValueError(
             f"Spark's JSON parser yielded {vals['n']} of {len(clean)} decoded "
@@ -265,6 +279,7 @@ def _process_aggregate(
 
     vals: dict[str, Any] = {}
     cols: dict[str, Column] = {}  # evaluated in ONE literal-fold job
+    finals: dict[str, str] = {}
     for i, spec in enumerate(counters):
         mine = [r for r in inters if (r.get("counter_id"), r.get("counter_type"))
                 == (spec.id, spec.counter_type)]
@@ -274,13 +289,14 @@ def _process_aggregate(
         carried = _state_for(resp.state, spec, "").get("base64_hll")
         sketches = [base64.b64decode(s) for s in
                     [*(r.get("base64_hll") for r in mine), carried] if s]
-        if len(sketches) > 1:
+        final = event.is_final_invoke_for_window and sketches
+        if len(sketches) > 1 or final:
             cols[f"c{i}"] = _hll_union(sketches)
         elif sketches:
             vals[f"c{i}"] = sketches[0]
-        if event.is_final_invoke_for_window and sketches:
-            cols[f"v{i}"] = finalize_state(spec, _hll_union(sketches))
-    vals.update(_one_row(spark, cols))
+        if final:
+            finals[f"v{i}"] = finalize_state(spec, f"c{i}")
+    vals.update(_one_row(spark, cols, finals))
     _settle(counters, vals, event, "", resp, level2=True)
 
 

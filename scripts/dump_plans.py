@@ -538,9 +538,9 @@ SHOWCASE: dict[str, str] = {
         "second scan."
     ),
     "counter_jq_reshape": (
-        "F8: the jq object-construction transform compiled to JVM "
-        "projection Columns (jq.py compiled subset) applied OVER the "
-        "windowed counter aggregate — a Project above the flagship "
+        "F8: the jq object-construction transform compiled to one SQL "
+        "expression (jq.py::jq_sql) applied OVER the windowed counter "
+        "aggregate — one Generate inlining its objects above the flagship "
         "single-exchange shape; the interpreter never runs on data rows."
     ),
     "counter_replay_source": (
@@ -610,10 +610,11 @@ SHOWCASE: dict[str, str] = {
         "the standard single-exchange partial+final pair."
     ),
     "counter_jq_iterate": (
-        "F8 multi-output '.path[]' iteration compiled to explode: the "
-        "hourly per-type array is built by one windowed agg, then the jq "
-        "pipeline un-nests row-locally — no second wide exchange after "
-        "the explode."
+        "F8 multi-output '.path[]' iteration compiled to one SQL "
+        "expression (flatten/filter/transform over each row's objects) "
+        "inlined by one generator: the hourly per-type array is built by "
+        "one windowed agg, then the jq pipeline un-nests row-locally — no "
+        "second wide exchange after the generator."
     ),
     "kpl_roundtrip": (
         "S3 wire-format round trip: applyInPandas packs KPL protobuf "

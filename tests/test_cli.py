@@ -315,6 +315,7 @@ def test_cli_batch_matches_follow_over_edge_lines(spark, tmp_path):
     import datetime as dt
 
     from kinesis_data_counter_spark.sources.replay_source import (
+        KinesisReplayDataSource,
         open_shard_records,
     )
     from kinesis_data_counter_spark.streaming.runner import drain
@@ -328,6 +329,7 @@ def test_cli_batch_matches_follow_over_edge_lines(spark, tmp_path):
 
     first = json.loads(rec(0))
     del first["__pk"]
+    first["data"] = "a body field named like the wire column"
     shards = {
         "shard-000.jsonl": [
             json.dumps(first),  # the schema sample has no __pk
@@ -340,7 +342,10 @@ def test_cli_batch_matches_follow_over_edge_lines(spark, tmp_path):
                         "user_id": 2, "event_type": "click"}),  # float arrival
             rec(3, ts=12),  # its own ts is no sampled field: arrival windows it
         ],
-        "shard-001.jsonl": [rec(i) for i in range(4, 12)],
+        "shard-001.jsonl": [rec(i) for i in range(4, 12)] + [
+            json.dumps({"__pk": "u12", "__arrival_ms": str(base + 240_000),
+                        "user_id": 0, "event_type": "view"}),  # string arrival
+        ],
     }
     d = tmp_path / "edge"
     d.mkdir()
@@ -357,11 +362,17 @@ def test_cli_batch_matches_follow_over_edge_lines(spark, tmp_path):
     assert batch == sorted(b2.getvalue().splitlines())
     rows = [json.loads(l) for l in batch]
     assert all(r.get("window_start") != 0 and r.get("time") != 0 for r in rows)
-    # 11 records have an arrival time: ids 0, 2, 3 and 4-11
+    # each line is its own counter's object: no other counter's keys
+    plain = {"event_source_arn", "window_start", "window_end", "counter_id",
+             "counter_type", "value"}
+    assert all(set(r) == ({"time", "name", "value"} if "name" in r else plain)
+               for r in rows)
+    assert sum("name" in r for r in rows) == 5
+    # 12 records have an arrival time: ids 0, 2, 3, 4-11 and the string one
     requests = {r["window_start"]: r["value"] for r in rows
-                if r["counter_id"] == "requests"}
+                if r.get("counter_id") == "requests"}
     assert requests == {base: 2, base + 60_000: 3, base + 120_000: 3,
-                        base + 180_000: 3}
+                        base + 180_000: 3, base + 240_000: 1}
 
     # record for record too, bad lines included; only the stream numbers them
     records = open_shard_records(spark, str(d))
@@ -375,7 +386,13 @@ def test_cli_batch_matches_follow_over_edge_lines(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ckpt"))
     )
     got = sorted(map(str, records.collect()))
-    assert got == sorted(map(str, streamed)) and len(got) == 15
+    assert got == sorted(map(str, streamed)) and len(got) == 16
+    # the public source lifts the envelope by the decode's own rule
+    spark.dataSource.register(KinesisReplayDataSource)
+    envelope = ["shard_id", "partition_key", "approximate_arrival"]
+    lifted = spark.read.format("kinesis_replay").option("path", str(d)).load()
+    assert (sorted(map(str, lifted.select(envelope).collect()))
+            == sorted(map(str, records.select(envelope).collect())))
 
 
 def _source_tasks(spark, jobs) -> int:
@@ -392,30 +409,100 @@ def _source_tasks(spark, jobs) -> int:
     return n
 
 
-def test_cli_fanout_scans_the_source_once(spark, tmp_path, spark_jobs):
-    # 4 routed counters on one window share one aggregate over one scan:
-    # the union reads only its checkpoint, and the CLI run is 3 jobs (the
-    # aggregate's map stage over the scan, its reduce into the checkpoint,
-    # and the sorted output's one partition), not 7
-    from kinesis_data_counter_spark.__main__ import _load_input, build_parser
+def test_cli_fanout_scans_the_source_once(spark, tmp_path, spark_jobs, monkeypatch):
+    # 4 routed counters on one window share one aggregate over one scan.
+    # assemble_counters' per-counter frames union over its checkpoint; the
+    # CLI's one statement needs none and runs 2 jobs (the aggregate's map
+    # stage over the scan, and the result stage serializing and sorting
+    # its one partition), not 7
+    from kinesis_data_counter_spark.__main__ import build_parser
     from kinesis_data_counter_spark.config import Config
     from kinesis_data_counter_spark.operators.counter import (
         assemble_counters,
         union_counter_results,
     )
+    from kinesis_data_counter_spark.sources.replay_source import open_shard_records
 
     d = _make_stream_dir(tmp_path)
     cfg = tmp_path / "c.yaml"
     cfg.write_text(_FANOUT_CONFIG)
     frames = assemble_counters(
-        _load_input(spark, d, "ts"), Config.load(str(cfg)),
+        open_shard_records(spark, d), Config.load(str(cfg)),
         build_parser().get_default("stream_arn"),
     )
     plan = union_counter_results(frames)._jdf.queryExecution().executedPlan()
     assert "FileScan" not in plan.toString()
 
+    def no_checkpoint(self, *args, **kwargs):
+        raise AssertionError("the CLI batch path checkpoints")
+
+    monkeypatch.setattr(type(frames["requests"]), "localCheckpoint", no_checkpoint)
     buf = io.StringIO()
     jobs, rc = spark_jobs(lambda: main(["--path", d, "--config", str(cfg)], out=buf))
     assert rc == 0 and len(buf.getvalue().splitlines()) == 4 * 5
-    assert len(jobs) == 3
+    assert len(jobs) == 2
     assert 0 < _source_tasks(spark, jobs) <= 3  # at most one task per shard
+
+
+def test_cli_batch_op_py4j_budget(spark, tmp_path):
+    # the batch op is one statement: its py4j round-trips stay a small
+    # fixed number, not one per DataFrame step and counter
+    from py4j.clientserver import ClientServerConnection
+
+    d = _make_stream_dir(tmp_path)
+    cfg = tmp_path / "c.yaml"
+    cfg.write_text(_FANOUT_CONFIG)
+    args = ["--path", d, "--config", str(cfg)]
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, *a, **k):
+        calls.append(1)
+        return send(self, *a, **k)
+
+    ClientServerConnection.send_command = counted
+    try:
+        assert main(args, out=io.StringIO()) == 0
+    finally:
+        ClientServerConnection.send_command = send
+    assert 0 < len(calls) <= 300
+
+
+def test_cli_literals_come_out_verbatim(spark, tmp_path):
+    # every literal is a bound parameter, never SQL text: quotes and
+    # braces in a counter id, the ARN and a jq string pass through as is
+    d = _make_stream_dir(tmp_path)
+    odd = """it's "odd" {x} }{"""
+    arn = "arn:aws:kinesis:us-east-1:000000000000:stream/it's-\"odd\"-{x}"
+    cfg = tmp_path / "c.yaml"
+    cfg.write_text(json.dumps({"counters": [
+        {"id": odd, "counter_type": "count", "target_column": "*",
+         "window": "1 hour"},
+        {"id": "reshaped", "counter_type": "count", "target_column": "*",
+         "window": "1 hour", "jq_expr": '{"name": ' + json.dumps(odd)
+         + ', "label": "\\(.counter_id)-{\'}", "value": .value}'},
+    ]}))
+    buf = io.StringIO()
+    assert main(["--path", d, "--config", str(cfg), "--stream-arn", arn],
+                out=buf) == 0
+    rows = [json.loads(l) for l in buf.getvalue().splitlines()]
+    ids = {(r["counter_id"], r["event_source_arn"]) for r in rows if "counter_id" in r}
+    assert ids == {(odd, arn)}
+    assert {(r["name"], r["label"]) for r in rows if "name" in r} == {(odd, "reshaped-{'}")}
+    assert sum(r["value"] for r in rows if "counter_id" in r) == 200
+
+
+def test_cli_skips_a_bad_first_line(spark, tmp_path):
+    # the schema sample is the first line that is a JSON object: a first
+    # line that is not one is dropped per record, like any other
+    d = _make_stream_dir(tmp_path)
+    shard = f"{d}/shard-000.jsonl"
+    with open(shard) as f:
+        lines = f.read()
+    with open(shard, "w") as f:
+        f.write("not json\n" + lines)
+    args = ["--path", d, "--window", "1m", "--ts-col", "approximate_arrival"]
+    for extra in ([], ["--follow"]):
+        buf = io.StringIO()
+        assert main(args + extra, out=buf) == 0
+        assert sum(json.loads(l)["value"] for l in buf.getvalue().splitlines()) == 200

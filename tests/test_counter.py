@@ -382,3 +382,26 @@ def test_state_rule_lives_only_in_the_counter_algebra():
         if tok in (root / rel).read_text()
     }
     assert spelled == set()
+
+
+def test_counter_statements_keep_the_callers_cache(spark):
+    """The counter builders hand their input to SQL as a temporary view;
+    closing it leaves a persisted input cached, and the statements read
+    that cache instead of recomputing the input."""
+    from kinesis_data_counter_spark.jq import apply_jq
+
+    def reads_cache(df):
+        return "InMemoryTableScan" in df._jdf.queryExecution().executedPlan().toString()
+
+    df = access_log(spark, 10, 100).persist()
+    try:
+        df.count()
+        spec = CounterSpec(id="requests", counter_type="count",
+                           input_stream_arn=ARN).validate()
+        out = build_counter(df, spec, ts_col="time")
+        assert reads_cache(out) and out.collect()[0].value == 100
+        assert reads_cache(apply_jq(df, "select(.user_id > 1000)"))
+        assert reads_cache(df.groupBy("shard").count())
+    finally:
+        df.unpersist()
+
