@@ -8,14 +8,11 @@ an unambiguous pattern must compare as an exact string; the bare pattern
 resources (arn.go:30-42).
 
 This layer is pure Python — it runs at config/plan time to route sources to
-counters; nothing here touches the DataFrame plan. When multiple logical
-streams are multiplexed into one DataFrame, use :func:`glob_to_sql_like` to
-push the same pattern into the plan as a filter instead.
+counters; nothing here touches the DataFrame plan.
 """
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
 
 
@@ -129,13 +126,3 @@ def _match_segment(pattern: str, value: str) -> bool:
             return False
         idx = found + len(piece)
     return True
-
-
-def glob_to_sql_rlike(pattern: str) -> str:
-    """Translate an ARN glob into a Spark ``rlike`` regex for in-plan routing.
-
-    Used when one DataFrame multiplexes records from several logical streams
-    (column ``event_source_arn``): the routing predicate stays JVM-side and is
-    eligible for pushdown instead of a Python-side filter.
-    """
-    return "^" + ".*".join(re.escape(p) for p in pattern.split("*")) + "$"

@@ -3,7 +3,3 @@
 Kept deliberately thin: almost everything the engine needs is a built-in
 ``pyspark.sql.functions`` call — see operators/ for the composed forms.
 """
-
-from kinesis_data_counter_spark.operators.counter import tumbling_window
-
-__all__ = ["tumbling_window"]

@@ -51,49 +51,6 @@ def write_curated(
     w.parquet(path)
 
 
-def upsert_partitions(
-    df: DataFrame,
-    path: str,
-    partition_by: Sequence[str],
-    sort_by: Sequence[str] = (),
-    max_records_per_file: int | None = None,
-) -> None:
-    """Idempotent partition-level upsert: replace exactly the partitions
-    present in ``df``, leave all others untouched.
-
-    This is the sink contract a windowed pipeline needs for safe
-    reprocessing: re-running window W overwrites W's directory instead of
-    appending duplicates (the reference's sink just re-PUTs records and
-    relies on downstream dedup, run.go sinks; here the storage layout IS
-    the dedup). Implemented with Spark's dynamic partition-overwrite mode —
-    overwrite resolves per partition directory at commit time, so a 100 TB
-    table with years of history pays only for the partitions being
-    replaced, never a full rewrite.
-
-    The session's ``partitionOverwriteMode`` is set to ``dynamic`` for the
-    duration of the write and restored after (the default ``static`` mode
-    would truncate the whole table first — silently destructive for this
-    use case).
-    """
-    if not partition_by:
-        raise ValueError("upsert_partitions requires at least one partition column")
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        write_curated(
-            df,
-            path,
-            partition_by=partition_by,
-            sort_by=sort_by,
-            max_records_per_file=max_records_per_file,
-            mode="overwrite",
-        )
-    finally:
-        spark.conf.set(key, prev)
-
-
 def compact_dataset(
     spark,
     path: str,

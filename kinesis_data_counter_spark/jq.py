@@ -42,7 +42,6 @@ from __future__ import annotations
 
 import json
 import re
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -54,82 +53,7 @@ class JqUnsupported(ValueError):
     """jq program outside the supported compiled subset."""
 
 
-@dataclass(frozen=True)
-class JqField:
-    name: str  # output field name
-    path: tuple[str, ...] | None  # .a.b.c access path, None for literal
-    literal: object | None = None
-
-
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
-_KEY_RX = re.compile(rf'\s*(?:"(?P<q>[^"]*)"|(?P<bare>{_IDENT}))\s*:\s*')
-_PATH_RX = re.compile(rf"\.(?:{_IDENT})(?:\.(?:{_IDENT}))*")
-
-
-def parse_jq_projection(program: str) -> list[JqField]:
-    """Parse the object-construction subset; raise JqUnsupported otherwise."""
-    src = program.strip()
-    if src == ".":
-        return []  # identity
-    if not (src.startswith("{") and src.endswith("}")):
-        raise JqUnsupported(f"only object construction is supported: {program!r}")
-    body = src[1:-1]
-    fields: list[JqField] = []
-    pos = 0
-    while pos < len(body):
-        m = _KEY_RX.match(body, pos)
-        if not m:
-            if body[pos:].strip() == "":
-                break
-            raise JqUnsupported(f"cannot parse key at: {body[pos:]!r}")
-        key = m.group("q") if m.group("q") is not None else m.group("bare")
-        pos = m.end()
-        # value: .path | JSON literal (string/number/true/false/null)
-        rest = body[pos:]
-        pm = _PATH_RX.match(rest.strip())
-        stripped_offset = len(rest) - len(rest.lstrip())
-        if pm and pm.start() == 0:
-            path = tuple(p for p in pm.group(0).split(".") if p)
-            fields.append(JqField(key, path))
-            pos += stripped_offset + pm.end()
-        else:
-            # try a JSON literal up to the next top-level comma
-            end = _find_value_end(rest)
-            lit_src = rest[:end].strip()
-            try:
-                lit = json.loads(lit_src)
-            except json.JSONDecodeError as e:
-                raise JqUnsupported(f"unsupported jq value: {lit_src!r}") from e
-            fields.append(JqField(key, None, lit))
-            pos += end
-        # skip separator
-        sep = body[pos:].lstrip()
-        if sep.startswith(","):
-            pos = len(body) - len(sep) + 1
-        else:
-            pos = len(body) - len(sep)
-            if sep.strip():
-                raise JqUnsupported(f"expected ',' at: {sep!r}")
-    return fields
-
-
-def _find_value_end(s: str) -> int:
-    """Index of the first top-level comma (or end) in a jq value string."""
-    depth = 0
-    in_str = False
-    for i, ch in enumerate(s):
-        if in_str:
-            if ch == '"' and s[i - 1] != "\\":
-                in_str = False
-        elif ch == '"':
-            in_str = True
-        elif ch in "{[(":
-            depth += 1
-        elif ch in "}])":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            return i
-    return len(s)
 
 
 # ---------------------------------------------------------------------------

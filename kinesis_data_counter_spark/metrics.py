@@ -1,55 +1,14 @@
-"""Single-pass pipeline metrics via the Observation API.
+"""Single-pass data-quality metrics: column profiles, key skew, drift
+and expectations.
 
-A curation funnel at 100 TB cannot afford a second scan per stage just to
-count what each filter dropped; ``df.observe`` attaches aggregate metrics
-that are computed DURING the action that materializes the DataFrame —
-zero extra passes, exact values, collected on the driver when the action
-finishes. This is the engine-native replacement for the reference's ad-hoc
-log counters (run.go logs per-poll record counts).
-
-Streaming note: on a streaming DataFrame the same ``observe`` call surfaces
-per-micro-batch metrics in each ``QueryProgressEvent.observedMetrics`` —
-one code path for both execution modes.
+Each report is one aggregate over the data (or over a bounded sample of
+it), never a scan per column or per rule, so it can run inline in a
+curation funnel at corpus scale.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
-
-
-def observed(
-    df: DataFrame, name: str, **metrics: Column
-) -> tuple[DataFrame, Observation]:
-    """Attach named aggregate metrics to ``df``; returns (df, observation).
-
-    ``metrics`` values are aggregate Columns (count/sum/avg/...); DISTINCT
-    aggregates are rejected by the engine (metrics must be mergeable across
-    tasks — use ``approx_count_distinct``). Read ``observation.get`` AFTER
-    an action has run over the returned frame.
-    """
-    obs = Observation(name)
-    out = df.observe(obs, *(m.alias(k) for k, m in metrics.items()))
-    return out, obs
-
-
-def observed_stage(
-    df: DataFrame, stage: str, keep: Column
-) -> tuple[DataFrame, Observation]:
-    """Filter ``df`` by ``keep`` while metering rows in / rows kept.
-
-    The funnel primitive: one observation per stage records the selectivity
-    actually seen in production (``rows_in``, ``rows_kept``) in the same
-    pass that applies the filter.
-    """
-    from pyspark.sql import functions as F
-
-    metered, obs = observed(
-        df,
-        f"stage:{stage}",
-        rows_in=F.count(F.lit(1)),
-        rows_kept=F.count(F.when(keep, 1)),
-    )
-    return metered.where(keep), obs
+from pyspark.sql import Column, DataFrame
 
 
 def profile_columns(df: DataFrame, cols: list[str] | None = None) -> DataFrame:

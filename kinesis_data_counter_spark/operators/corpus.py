@@ -624,8 +624,7 @@ def erase_subjects(
     Scale: the request set is small (legal requests, not data-sized), so
     the anti and semi joins broadcast it — no shuffle of the fact table;
     the audit's two counts are computed from one persisted flag column
-    pass rather than two scans. The rewrite itself pairs with
-    ``io.upsert_partitions``: only partitions containing a hit need
+    pass rather than two scans. Only partitions containing a hit need
     rewriting, which parquet min/max stats on the subject column identify
     without reading row data.
     """

@@ -144,15 +144,6 @@ def finalize_state(spec: CounterSpec, state: str) -> str:
     return state if spec.counter_type == COUNT else f"hll_sketch_estimate({state})"
 
 
-def tumbling_window(ts_col: str | Column, size: str) -> Column:
-    """Epoch-aligned tumbling window ≈ reference run.go:148-159 truncation.
-
-    ``F.window`` truncates to epoch-aligned boundaries for fixed durations —
-    identical to Go's ``t.Truncate(W)`` for sub-day windows.
-    """
-    return F.window(ts_col, size)
-
-
 # ---------------------------------------------------------------------------
 # Statement pieces shared by every output path
 # ---------------------------------------------------------------------------
@@ -363,7 +354,8 @@ def partial_counter(
     (counter.go:557-591). Rows are small and keyed; sink them anywhere and
     feed ``merge_partials`` in a different job.
     """
-    keys: list[Column] = [tumbling_window(ts_col, spec.window).alias("window")]
+    # epoch-aligned, like the reference's t.Truncate(W) (run.go:148-159)
+    keys: list[Column] = [F.window(ts_col, spec.window).alias("window")]
     if shard_col:
         keys.append(F.col(shard_col).cast("string").alias("shard_id"))
     else:

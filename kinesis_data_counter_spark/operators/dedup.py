@@ -18,7 +18,7 @@ Scale notes (100 TB):
   size); banding turns near-dup search into b equi-joins on 64-bit band
   signatures.
 - SimHash: 64 (or 128) sign-sums per doc; pigeonhole banding generalized to
-  block combinations (Manku et al. WWW'07 — size with ``simhash_blocks_for``)
+  block combinations (Manku et al. WWW'07 — the ``blocks`` knob)
   finds all pairs within the hamming radius without an O(n²) cross join, with
   join-key width that scales with the corpus; pairs de-dup by
   first-agreeing-table, not a distinct shuffle.
@@ -576,47 +576,6 @@ def incremental_minhash_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash_blocks_for(
-    n_docs: int,
-    max_hamming: int = 3,
-    bits: int = 64,
-    target_bucket: int = 64,
-    max_tables: int = 64,
-) -> int:
-    """Block-count sizing rule for combination banding (Manku et al.,
-    WWW'07 — the simhash sibling of similarity.lsh_bits_for).
-
-    With the minimal d+1 blocks, band keys are bits/(d+1) wide (16 bits
-    for 64-bit fingerprints at d=3), so bucket occupancy — and with it
-    candidate volume, which is occupancy² per bucket — grows linearly
-    with the corpus: the banded join degenerates past
-    n ≈ target·2^16 ≈ 4M docs. Splitting into m > d+1 blocks and keying
-    each of C(m, d) tables on an (m−d)-block COMBINATION keeps the
-    pigeonhole guarantee (≤ d differing bits leave some m−d blocks
-    untouched) while widening the key to ≈ bits·(m−d)/m — e.g. m=6 at
-    64-bit/d=3 gives 20 tables on 32-bit keys: ~2^16× lower occupancy
-    for 5× more tables. Returns the smallest m whose key width covers
-    ``log2(n/target)``, capped where the table count C(m, d) would pass
-    ``max_tables``.
-
-    Note hamming radius is WIDTH-RELATIVE: d of 128 bits is a stricter
-    cosine cutoff than d of 64 (the fraction of differing bits is the
-    hyperplane-angle estimate), so a wider fingerprint (``bits=128``)
-    buys estimator precision — scale d with it to hold the same
-    threshold, and let THIS rule (not fingerprint width) carry the
-    candidate-volume scaling."""
-    import math
-
-    d = max_hamming
-    need = (
-        0 if n_docs <= target_bucket else math.ceil(math.log2(n_docs / target_bucket))
-    )
-    m = d + 1
-    while (bits * (m - d)) // m < need and math.comb(m + 1, d) <= max_tables:
-        m += 1
-    return m
-
-
 def simhash_signatures(
     df: DataFrame,
     n: int = 3,
@@ -689,10 +648,10 @@ def simhash_pairs(
     subset untouched, so candidates come from C(blocks, d) equi-joins,
     each keyed by one combination's concatenated block values, instead of
     a cross join. Exact hamming (bit_count of XOR per word) then filters
-    candidates. ``blocks`` is the scale knob — size it with
-    :func:`simhash_blocks_for`: more blocks widen the join key
-    (bits·(blocks−d)/blocks), pinning bucket occupancy as the corpus
-    grows, for a combinatorially-bounded number of tables.
+    candidates. ``blocks`` is the scale knob: more blocks widen the join
+    key (bits·(blocks−d)/blocks), pinning bucket occupancy as the corpus
+    grows, for C(blocks, d) tables — past ~4M docs the minimal d+1 blocks
+    (16-bit keys at 64 bits, d=3) overfill their buckets.
 
     A pair agreeing on several combinations is emitted once via the
     first-agreeing-table rule (row-local comparison of the full

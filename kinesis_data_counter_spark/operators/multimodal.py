@@ -10,8 +10,7 @@ Codecs: BMP (24-bit BI_RGB), WAV (PCM 8/16-bit) and PNG (non-interlaced
 CRC, IDAT inflate, and all five scanline filters) decode END-TO-END with
 pure-Python parsers (``decode_bmp`` / ``decode_wav`` / ``decode_png`` —
 no external libs), so the decode path runs for real in this container;
-JPEG/MP3 remain import-gated on pillow/soundfile (``decode_image``
-dispatches by magic to the bundled parsers first). Everything around
+JPEG/MP3 would need pillow/soundfile, which are not bundled. Everything around
 decode — schema, batch iteration, Arrow binary transfer, partition
 sizing — is the same either way, and ``media_features`` keeps a
 codec-free byte-level fallback output.
@@ -20,7 +19,6 @@ codec-free byte-level fallback output.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 
@@ -29,48 +27,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kinesis_data_counter_spark.session import fan_out
-
-# Optional decoders — gate behind import-try (none are bundled here).
-try:  # pragma: no cover - not installed in this container
-    from PIL import Image  # type: ignore
-
-    _HAS_PIL = True
-except ImportError:
-    _HAS_PIL = False
-
-
-def decode_image(payload: bytes) -> Any:
-    """Decode an image payload.
-
-    BMP payloads (magic ``BM``) and PNG payloads (the 8-byte signature)
-    decode with the bundled pure-Python parsers — ``(width, height,
-    bgr_bytes)`` / ``(width, height, channels, pixels)``; other formats
-    need pillow (not bundled) and return a PIL image."""
-    if payload[:2] == b"BM":
-        return decode_bmp(payload)
-    if payload[:8] == _PNG_SIG:
-        return decode_png(payload)
-    if not _HAS_PIL:
-        raise NotImplementedError(
-            "non-BMP/PNG image decode requires pillow; install it or use media_features()"
-        )
-    import io
-
-    return Image.open(io.BytesIO(payload))  # pragma: no cover
-
-
-def decode_audio(payload: bytes) -> Any:
-    """Decode an audio payload.
-
-    RIFF/WAVE PCM payloads decode with the bundled pure-Python parser —
-    ``(sample_rate, n_channels, bits, data_bytes)``; compressed formats
-    need soundfile/librosa (not bundled)."""
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return decode_wav(payload)
-    raise NotImplementedError(
-        "non-WAV audio decode requires soundfile/librosa (not bundled)"
-    )
-
 
 # ---------------------------------------------------------------------------
 # Pure-struct codecs: BMP (24-bit BI_RGB) and WAV (PCM) — both formats parse
@@ -394,8 +350,8 @@ def resize_media(
 ) -> DataFrame:
     """Nearest-neighbor resize of media payloads to ``out_w × out_h``.
 
-    A real pipeline decodes the payload (``decode_image`` — stubbed without
-    pillow) and resizes pixels; here the payload's bytes ARE the pixels of a
+    A real pipeline decodes the payload (JPEG needs pillow, which is not
+    bundled) and resizes pixels; here the payload's bytes ARE the pixels of a
     square-ish ``orig_w × orig_h`` grid (``orig_w = ⌈√n⌉``), and the resize
     is a genuine 2-D nearest-neighbor downsample done as one numpy fancy-
     index per payload. That keeps every production-relevant part real —

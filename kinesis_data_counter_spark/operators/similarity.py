@@ -46,19 +46,12 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity; inputs cast to double for stable arithmetic."""
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    return dot(ad, bd) / (F.sqrt(dot(ad, ad)) * F.sqrt(dot(bd, bd)))
-
-
 @pandas_udf(DoubleType())
 def batch_cosine(va: pd.Series, vb: pd.Series) -> pd.Series:
     """Row-wise cosine over two array columns, one numpy pass per Arrow batch.
 
-    The vectorized twin of ``cosine`` for high-pair-count stages: HOF
-    lambdas evaluate interpreted per array element, so a million-pair verify
+    Used for high-pair-count stages instead of a Column-expression cosine:
+    HOF lambdas evaluate interpreted per array element, so a million-pair verify
     pays ~10⁸ lambda calls; here it's three einsum/norm passes per batch.
     """
     if len(va) == 0:
@@ -1063,8 +1056,7 @@ def ivf_pq_probe(
     """Query a MATERIALIZED IVF-PQ index: ``codes`` is the persisted
     (neighbor_id, codes, list_id) table and ``vectors`` the persisted
     (neighbor_id, cv) float table — the two artifacts an index deployment
-    stores (``streaming/runner.py::stream_ann_index`` maintains them
-    incrementally). Same plan as the in-line ``ivf_pq_topk`` tail: probe
+    stores. Same plan as the in-line ``ivf_pq_topk`` tail: probe
     join on list_id, ADC over code rows, exact refine on the candidate
     slice only.
     """

@@ -152,119 +152,6 @@ def quantile_two_level(
     )
 
 
-def topk_partials(
-    df: DataFrame,
-    item_col: str | Column,
-    max_items_tracked: int = DEFAULT_MAX_ITEMS,
-    shard_col: str | Column | None = None,
-) -> DataFrame:
-    """Level-1 top-k partials → mergeable state rows (the heavy-hitter twin
-    of ``counter.partial_counter``'s HLL rows, counter.go:483-512).
-
-    One row per shard carrying a serialized ``approx_top_k_accumulate``
-    state (a struct with a BINARY sketch) — parquet/Kinesis it and feed
-    ``merge_topk_partials`` in a DIFFERENT job. State size is
-    O(max_items_tracked) regardless of input rows.
-    """
-    m = int(max_items_tracked)
-    cols = [_as_col(item_col).alias("__item")]
-    if shard_col is not None:
-        cols.append(_as_col(shard_col).cast("string").alias("shard_id"))
-    else:
-        cols.append(F.lit("").alias("shard_id"))
-    slim = df.select(*cols).filter(F.col("__item").isNotNull())
-    return slim.groupBy("shard_id").agg(
-        F.expr(f"approx_top_k_accumulate(__item, {m})").alias("topk_state")
-    )
-
-
-def merge_topk_partials(
-    partials: DataFrame,
-    k: int = 10,
-    max_items_tracked: int = DEFAULT_MAX_ITEMS,
-) -> DataFrame:
-    """Level-2: combine top-k states across shards → deterministic top-k
-    rows (≈ aggregateProcess, counter.go:348-412, for heavy hitters).
-
-    ``partials`` is the ``topk_partials`` output read back from wherever it
-    was sunk. Returns (rank int, item, cnt bigint) like ``topk_two_level``,
-    with the same (count desc, item asc) reproducible cutoff.
-    """
-    m, k = int(max_items_tracked), int(k)
-    combined = partials.agg(
-        F.expr(f"approx_top_k_combine(topk_state, {m})").alias("state")
-    )
-    est = combined.select(
-        F.explode(F.expr(f"approx_top_k_estimate(state, {m})")).alias("e")
-    ).select(F.col("e.item").alias("item"), F.col("e.count").alias("cnt"))
-    w = Window.orderBy(F.desc("cnt"), F.asc("item"))
-    return est.select(
-        F.row_number().over(w).cast("int").alias("rank"), "item", "cnt"
-    ).where(F.col("rank") <= k)
-
-
-def quantile_partials(
-    df: DataFrame,
-    value_col: str | Column,
-    group_col: str | Column | None = None,
-    shard_col: str | Column | None = None,
-    k: int = 200,
-) -> DataFrame:
-    """Level-1 KLL partials → mergeable state rows (the quantile twin of
-    ``counter.partial_counter``'s HLL rows, counter.go:483-512).
-
-    One row per (group?, shard) carrying a serialized KLL state (BINARY) —
-    sink it to parquet/Kinesis and feed ``merge_quantile_partials`` in a
-    DIFFERENT job, which is precisely what ``percentile_approx`` cannot do.
-    """
-    cols = [_as_col(value_col).cast("double").alias("__v")]
-    gb: list[str] = []
-    if group_col is not None:
-        cols.append(_as_col(group_col).alias("group"))
-        gb = ["group"]
-    if shard_col is not None:
-        cols.append(_as_col(shard_col).cast("string").alias("shard_id"))
-    else:
-        cols.append(F.lit("").alias("shard_id"))
-    return (
-        df.select(*cols)
-        .groupBy(*gb, "shard_id")
-        .agg(F.kll_sketch_agg_double("__v", F.lit(int(k))).alias("kll_state"))
-    )
-
-
-def merge_quantile_partials(
-    partials: DataFrame,
-    quantiles: tuple[float, ...] = (0.5, 0.95, 0.99),
-    k: int = 200,
-) -> DataFrame:
-    """Level-2: union KLL states per group → quantile estimates
-    (≈ aggregateProcess, counter.go:348-412, for rank statistics).
-
-    ``partials`` is the ``quantile_partials`` output read back from
-    wherever it was sunk. Returns (group?, q, est) like
-    ``quantile_two_level``.
-    """
-    gb = [c for c in partials.columns if c not in ("shard_id", "kll_state")]
-    merged = partials.groupBy(*gb).agg(
-        F.kll_merge_agg_double("kll_state", F.lit(int(k))).alias("sk")
-    )
-    qarr = F.array(
-        *[
-            F.struct(
-                F.lit(float(q)).alias("q"),
-                F.kll_sketch_get_quantile_double("sk", F.lit(float(q))).alias(
-                    "est"
-                ),
-            )
-            for q in quantiles
-        ]
-    )
-    return merged.select(*gb, F.explode(qarr).alias("e")).select(
-        *gb, F.col("e.q").alias("q"), F.col("e.est").alias("est")
-    )
-
-
 def theta_distinct_windowed(
     df: DataFrame,
     col: str | Column,

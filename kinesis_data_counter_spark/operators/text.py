@@ -45,42 +45,14 @@ def _token_hits(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: t.isin(*words)))
 
 
-def _word_hits(text: Column, words: tuple[str, ...]) -> Column:
-    """Number of tokens of ``text`` that are in ``words`` (whitespace split)."""
-    return _token_hits(tokens_lower(text), words)
-
-
-def detect_language_from_tokens(toks: Column) -> Column:
-    """Language ID over a pre-tokenized column (see ``tokens_lower``)."""
-    best: Column = F.lit("und")
-    best_score: Column = F.lit(0)
-    # priority order with strict >: the first language reaching the max wins
-    # ties (en beats de beats es ...), matching the oracle's CASE chain
-    for lang in LANG_PRIORITY:
-        s = _token_hits(toks, LANG_MARKERS[lang])
-        take = s > best_score
-        best = F.when(take, F.lit(lang)).otherwise(best)
-        best_score = F.when(take, s).otherwise(best_score)
-    return best
-
-
-def detect_language(text: Column) -> Column:
-    """Stopword-hit language ID: argmax of per-language marker counts.
-
-    Returns 'und' when no marker hits at all. Ties resolve by LANG_PRIORITY
-    order (deterministic, mirrored in the oracle SQL as a CASE chain).
-    For bulk use, pre-tokenize with ``tokens_lower`` in a ``withColumn``
-    and call ``detect_language_from_tokens`` — one split per row, not five.
-    """
-    return detect_language_from_tokens(tokens_lower(text))
-
-
 def detect_language_bulk(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(doc_id, detected) language ID for a whole corpus — the scale path.
 
-    Same rule set as ``detect_language`` but formulated as explode →
+    Stopword-hit language ID: the argmax of per-language marker counts,
+    'und' when no marker hits, ties resolved by ``LANG_PRIORITY`` (the
+    oracle's CASE chain). Formulated as explode →
     conditional-sum hash aggregate instead of per-row array HOFs: Spark
     evaluates ``filter``/``aggregate`` lambdas interpreted per element,
     while the exploded conditional sums stay in whole-stage codegen
@@ -160,7 +132,7 @@ def quality_features(
     # ONE tokenization shared by n_tokens and stopword_ratio (lowering
     # changes no whitespace, so the split is identical either way) and
     # regexp_count instead of build-the-replaced-string + length: the
-    # original token_count + _word_hits + regexp_replace formulation ran
+    # original token_count + word-hit + regexp_replace formulation ran
     # two full splits and materialized a punctuation-stripped copy of
     # every document per row — same outputs, ~one regex pass less
     # (guide §1.2 "per-task work"; outputs are bit-identical, see the
@@ -753,42 +725,6 @@ def _bpe_word_encoder(merges: list):
         return res
 
     return encode
-
-
-def bpe_encode(
-    df: DataFrame,
-    merges: list,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Tokenize with a trained merge list: (id, tokens array<string>,
-    n_tokens). Arrow-batched ``mapInPandas`` with the O(num_merges) merge
-    table captured in the closure (broadcast with the task, never joined);
-    NULL text propagates NULL tokens (the NULL-parity discipline)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    cols = [id_col, text_col]
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        enc = _bpe_word_encoder(merges)
-        for pdf in it:
-            ids, toks, ns = [], [], []
-            for rid, txt in zip(pdf[id_col], pdf[text_col]):
-                ids.append(rid)
-                if txt is None or (isinstance(txt, float) and pd.isna(txt)):
-                    toks.append(None)
-                    ns.append(None)
-                else:
-                    t = [s for w in txt.split() for s in enc(w)]
-                    toks.append(t)
-                    ns.append(len(t))
-            yield pd.DataFrame({"id": ids, "tokens": toks, "n_tokens": ns})
-
-    return df.select(*cols).mapInPandas(
-        _batches, "id long, tokens array<string>, n_tokens long"
-    ).withColumnRenamed("id", id_col)
 
 
 def bpe_roundtrip_stats(

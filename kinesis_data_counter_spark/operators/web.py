@@ -10,7 +10,6 @@ regexp + array slicing inside whole-stage codegen, never a Python UDF.
 
 Scale notes:
 - Domain extraction is row-local (zero shuffle).
-- ``domain_rollup`` is one partial+final hash agg keyed by domain.
 - ``blocklist_filter`` broadcasts the block set (legal/opt-out lists are
   small) — no shuffle of the corpus.
 - ``domain_cap`` is ONE scan + ONE shuffle: a single domain-partitioned
@@ -77,30 +76,6 @@ def registered_domain(
     return F.when(h.isNull(), F.lit(None).cast("string")).when(
         n <= take, h
     ).otherwise(F.array_join(F.slice(labels, -take, 3), "."))
-
-
-def domain_rollup(
-    df: DataFrame,
-    url_col: str = "url",
-    size_col: str | None = None,
-    extra_suffixes: tuple[str, ...] = DEFAULT_MULTI_SUFFIXES,
-) -> DataFrame:
-    """Per-registered-domain provenance statistics: document count and
-    (optionally) total/average size — the table a curation run consults
-    for concentration and quality-by-source decisions.
-
-    One partial+final hash agg keyed by domain (NULL domain = malformed
-    URLs, kept as its own row so bad provenance is visible)."""
-    d = df.withColumn(
-        "__dom", registered_domain(F.col(url_col), extra_suffixes)
-    )
-    aggs = [F.count(F.lit(1)).alias("n_docs")]
-    if size_col is not None:
-        aggs += [
-            F.sum(size_col).alias("total_size"),
-            F.round(F.avg(size_col), 6).alias("avg_size"),
-        ]
-    return d.groupBy(F.col("__dom").alias("domain")).agg(*aggs)
 
 
 def blocklist_filter(

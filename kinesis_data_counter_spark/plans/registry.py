@@ -2551,9 +2551,8 @@ def _q_dedup_simhash(spark, sf_dir):
     # so assert the banding invariant: the pigeonhole banded join finds
     # exactly the pairs a brute-force hamming scan finds.
     # SCALE: default blocks (= max_hamming+1, the fixture-honest minimum)
-    # here; past ~4M docs size the block count with dedup.simhash_blocks_for
-    # (Manku combination banding — wider combination keys pin bucket
-    # occupancy; tests pin it against brute force at m=8 and m=10)
+    # here; past ~4M docs raise ``blocks`` (Manku combination banding —
+    # wider combination keys pin bucket occupancy)
     (docs,) = _tables(spark, sf_dir, "documents")
     # ONE persisted signature pass feeds the banded join (both sides) AND
     # the brute-force check — the 64-conditional-sum aggregate is the

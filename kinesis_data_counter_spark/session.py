@@ -31,6 +31,11 @@ TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
 
+# The session get_spark built. While it is live, later calls return it
+# as is: re-sending the builder conf costs a py4j round-trip per setting.
+_built: SparkSession | None = None
+
+
 def get_spark(
     app_name: str = "kinesis-data-counter-spark",
     master: str | None = None,
@@ -43,7 +48,16 @@ def get_spark(
       truncates wall-clock time, which is epoch-aligned for sub-day windows).
     - AQE on: runtime partition coalescing + skew-join handling — this is the
       100TB insurance policy for skewed group keys.
+
+    The first call builds the session with this conf; later calls return it
+    while it is live, setting only an explicit ``shuffle_partitions``. A
+    session built elsewhere gets the conf applied through the builder.
     """
+    global _built
+    if _built is not None and _built.sparkContext._jsc is not None:
+        if shuffle_partitions is not None:
+            _built.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        return _built
     # executors spawn their own Python workers, which resolve imports via
     # PYTHONPATH — not the driver's sys.path. Exporting the package's
     # parent dir makes every Pandas-UDF/mapInPandas operator importable
@@ -83,7 +97,8 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
+    _built = builder.getOrCreate()
+    return _built
 
 
 def configure_session(spark: SparkSession) -> SparkSession:

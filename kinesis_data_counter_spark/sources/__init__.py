@@ -1,7 +1,4 @@
-from kinesis_data_counter_spark.sources.json_records import (
-    parse_json_records,
-    split_corrupt_records,
-)
+from kinesis_data_counter_spark.sources.json_records import parse_json_records
 from kinesis_data_counter_spark.sources.kpl import aggregate_records, deaggregate
 from kinesis_data_counter_spark.sources.replay_source import (
     KinesisReplayDataSource,
@@ -10,7 +7,6 @@ from kinesis_data_counter_spark.sources.replay_source import (
 
 __all__ = [
     "parse_json_records",
-    "split_corrupt_records",
     "aggregate_records",
     "deaggregate",
     "KinesisReplayDataSource",

@@ -54,10 +54,3 @@ def parse_json_records(
     )
     cols.append(corrupt.alias(CORRUPT_COL))
     return out.select(*cols)
-
-
-def split_corrupt_records(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(clean, failures) ≈ records vs batchItemFailures (counter.go:244-248)."""
-    clean = parsed.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    failures = parsed.filter(F.col(CORRUPT_COL).isNotNull())
-    return clean, failures

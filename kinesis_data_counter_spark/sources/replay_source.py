@@ -335,12 +335,12 @@ class _ReplayWriterBase:
     files into ``shard-*.jsonl``, O(files) with line streaming, exactly once
     per epoch under checkpointing: no record ever round-trips through driver
     memory. Like PutRecord itself the sink is at-least-once on crash between
-    commit and checkpoint write; records carry their pk so downstream dedup
-    (``stream_dedup``) can collapse replays. The stage-then-commit file
-    hand-off assumes a filesystem visible to driver and executors (local
-    mode / NFS / fuse-mounted object store); a real Kinesis deployment
-    replaces ``write`` with executor-side put_records and drops the staging
-    entirely.
+    commit and checkpoint write; records carry their pk so downstream
+    dedup (``dropDuplicatesWithinWatermark``) can collapse replays. The
+    stage-then-commit file hand-off assumes a filesystem visible to driver
+    and executors (local mode / NFS / fuse-mounted object store); a real
+    Kinesis deployment replaces ``write`` with executor-side put_records and
+    drops the staging entirely.
 
     ``write`` consumes ``pyarrow.RecordBatch`` input (the Arrow writer API):
     the ``partition_key``/``data`` columns come off each batch as plain

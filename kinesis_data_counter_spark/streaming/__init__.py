@@ -3,15 +3,11 @@ from kinesis_data_counter_spark.streaming.handler import (
     TimeWindowEvent,
     handle_time_window_event,
 )
-from kinesis_data_counter_spark.streaming.runner import (
-    run_counter_stream_once,
-    stream_counter,
-)
+from kinesis_data_counter_spark.streaming.runner import run_counter_stream_once
 
 __all__ = [
     "HandlerResponse",
     "TimeWindowEvent",
     "handle_time_window_event",
     "run_counter_stream_once",
-    "stream_counter",
 ]

@@ -66,23 +66,13 @@ def serialized_lines(
     return df.select(*keep, line.alias("line"))
 
 
-def rows_as_json(df: DataFrame) -> list[str]:
-    """Collect a (small, already-aggregated) result as JSON lines.
-
-    Serialization happens executor-side; only the finished strings cross to
-    the driver. For unbounded outputs use the put sinks' ``foreachPartition``
-    path instead.
-    """
-    return [r.line for r in serialized_lines(df).collect()]
-
-
 def console_writer(stream: Any = None) -> Callable[[DataFrame, int], None]:
     """K1: stdout/io.Writer sink — one JSON line per output record."""
 
     def write(df: DataFrame, epoch_id: int) -> None:
         target = stream or sys.stdout
-        for line in rows_as_json(df):
-            print(line, file=target)
+        for r in serialized_lines(df).collect():
+            print(r.line, file=target)
 
     return write
 

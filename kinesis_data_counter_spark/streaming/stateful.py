@@ -25,22 +25,7 @@ from typing import Any
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-# transformWithStateInPandas ships its state-server protocol over protobuf;
-# the runtime needs google.protobuf in the Python worker. This container
-# deliberately has no protobuf (hence the pure-Python KPL codec in
-# sources/kpl.py), so the TWS path is import-gated like the media codecs:
-# the processor and wrapper below are real and schema-complete, but running
-# them requires a protobuf-equipped cluster.
-try:  # pragma: no cover - absent in this container
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-
-    HAS_TWS_RUNTIME = True
-except ImportError:
-    HAS_TWS_RUNTIME = False
-
 
 def running_count_fn(
     key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
@@ -98,68 +83,4 @@ def run_stateful_counts_once(
         .groupBy("key")
         .agg(F.max("n_events").alias("n_events"))
         .select(F.col("key").alias(key_col), "n_events")
-    )
-
-
-class RunningAggregateProcessor(StatefulProcessor):
-    """``transformWithState`` processor: per-key running count + per-type map.
-
-    The modern (Spark 4) successor of ``running_count_fn``: instead of one
-    opaque state tuple, the handle exposes typed state primitives — here a
-    ValueState for the running total and a MapState keyed by event_type,
-    demonstrating state the applyInPandasWithState tuple encoding handles
-    poorly (an open-ended map). Emits (key, n_events, n_types) per batch.
-
-    Scale notes: state is per-key in the RocksDB-backed store (set
-    ``spark.sql.streaming.stateStore.providerClass`` to
-    ``...RocksDBStateStoreProvider``, required by transformWithState), so
-    map entries spill to disk instead of inflating executor heaps.
-    """
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.total = handle.getValueState("total", "n long")
-        self.types = handle.getMapState("types", "t string", "c long")
-
-    def handleInputRows(self, key, rows, timer_values):  # noqa: ANN001
-        n = self.total.get()[0] if self.total.exists() else 0
-        for pdf in rows:
-            n += len(pdf)
-            for t, c in pdf["event_type"].value_counts().items():
-                prev = (
-                    self.types.getValue((t,))[0]
-                    if self.types.containsKey((t,))
-                    else 0
-                )
-                self.types.updateValue((t,), (prev + int(c),))
-        self.total.update((n,))
-        n_types = sum(1 for _ in self.types.keys())
-        yield pd.DataFrame(
-            {"key": [key[0]], "n_events": [n], "n_types": [n_types]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def stateful_running_counts_tws(
-    records: DataFrame, key_col: str = "user_id"
-) -> DataFrame:
-    """Streaming per-key running (count, distinct-type count) via
-    ``transformWithStateInPandas``.
-
-    Requires the protobuf runtime (see HAS_TWS_RUNTIME) and the RocksDB
-    state store provider; raises immediately with a clear message when the
-    runtime is absent rather than crashing inside the streaming worker.
-    """
-    if not HAS_TWS_RUNTIME:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs google.protobuf in the Python "
-            "workers (not bundled here); use stateful_running_counts() or "
-            "run on a protobuf-equipped cluster"
-        )
-    return records.groupBy(records[key_col]).transformWithStateInPandas(
-        statefulProcessor=RunningAggregateProcessor(),
-        outputStructType="key long, n_events long, n_types long",
-        outputMode="Update",
-        timeMode="None",
     )

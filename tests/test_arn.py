@@ -3,7 +3,7 @@
 
 import pytest
 
-from kinesis_data_counter_spark.arn import Arn, ARNError, glob_to_sql_rlike
+from kinesis_data_counter_spark.arn import Arn, ARNError
 
 MATCH_CASES = [
     ("arn:aws:kinesis:ap-northeast-1:111122223333:stream/input-stream",
@@ -60,11 +60,3 @@ def test_bare_star_properties():
     a = Arn.parse_strict("*")
     assert a.is_ambiguous
     assert a.match("arn:aws:kinesis:r:acct:stream/any")
-
-
-def test_glob_to_sql_rlike():
-    rx = glob_to_sql_rlike("arn:aws:kinesis:*:*:stream/in-*")
-    import re
-
-    assert re.match(rx, "arn:aws:kinesis:us-east-1:1:stream/in-a")
-    assert not re.match(rx, "arn:aws:kinesis:us-east-1:1:stream/out")

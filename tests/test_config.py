@@ -3,7 +3,6 @@
 import pytest
 
 from kinesis_data_counter_spark.config import Config, ConfigError, CounterSpec, interpolate_env
-from kinesis_data_counter_spark.jq import JqUnsupported, parse_jq_projection
 
 
 def test_defaults_count_all():
@@ -71,20 +70,6 @@ def test_routing_fan_out():
     )
     hits = cfg.counters_for_source("arn:aws:kinesis:r:1:stream/s1")
     assert [c.id for c in hits] == ["a", "b"]
-
-
-def test_jq_subset():
-    fields = parse_jq_projection('{"time":.window_start, "name": "n", "value": .value}')
-    assert [(f.name, f.path, f.literal) for f in fields] == [
-        ("time", ("window_start",), None),
-        ("name", None, "n"),
-        ("value", ("value",), None),
-    ]
-
-
-def test_jq_rejects_general_programs():
-    with pytest.raises(JqUnsupported):
-        parse_jq_projection(".[] | select(.x > 1)")
 
 
 def test_version_constraints_semantics():

@@ -169,24 +169,6 @@ def test_simhash_combination_banding_equals_bruteforce(docs, spark):
     assert (1, 2) in {(r.a_id, r.b_id) for r in rows}
 
 
-def test_simhash_blocks_sizing_rule():
-    # minimal d+1 blocks (16-bit keys at 64/d=3) hold to ~4M docs at
-    # occupancy 64; past that the combination count grows the key width
-    assert DD.simhash_blocks_for(100_000) == 4
-    assert DD.simhash_blocks_for(4_000_000) == 4
-    assert DD.simhash_blocks_for(50_000_000) > 4
-    # key width (m-d)/m*64 must cover log2(n/64) whenever under the cap
-    import math
-
-    for n in (10**7, 10**9, 10**11):
-        m = DD.simhash_blocks_for(n)
-        if math.comb(m, 3) <= 64:  # not capped
-            assert (64 * (m - 3)) // m >= math.ceil(math.log2(n / 64)), (n, m)
-    # table count never exceeds the cap
-    for n in (10**6, 10**9, 10**13, 10**15):
-        assert math.comb(DD.simhash_blocks_for(n), 3) <= 64, n
-
-
 def test_stop_shingle_pruning(spark):
     # a shingle shared by every doc must not create candidates once pruned
     rows = [(i, f"common boiler plate line unique{i} tail words here") for i in range(20)]

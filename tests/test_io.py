@@ -39,48 +39,6 @@ def test_write_curated_layout_and_pruned_read(spark, sf_dir, tmp_path):
     assert "lang" in pf
 
 
-def test_upsert_partitions_replaces_only_touched_windows(spark, tmp_path):
-    from kinesis_data_counter_spark.io import upsert_partitions
-
-    path = str(tmp_path / "counters")
-    first = spark.createDataFrame(
-        [("w1", "a", 10), ("w1", "b", 20), ("w2", "a", 30)],
-        "window string, k string, v long",
-    )
-    upsert_partitions(first, path, partition_by=("window",))
-
-    # reprocess w2 with corrected values and add w3; w1 must be untouched
-    second = spark.createDataFrame(
-        [("w2", "a", 99), ("w3", "z", 1)], "window string, k string, v long"
-    )
-    upsert_partitions(second, path, partition_by=("window",))
-
-    got = {
-        (r["window"], r["k"]): r["v"] for r in spark.read.parquet(path).collect()
-    }
-    assert got == {
-        ("w1", "a"): 10,
-        ("w1", "b"): 20,
-        ("w2", "a"): 99,  # replaced, not duplicated
-        ("w3", "z"): 1,
-    }
-    # conf restored after the write
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        != "dynamic"
-    )
-
-
-def test_upsert_partitions_requires_partition_cols(spark):
-    import pytest
-
-    from kinesis_data_counter_spark.io import upsert_partitions
-
-    df = spark.createDataFrame([(1,)], "a long")
-    with pytest.raises(ValueError, match="partition column"):
-        upsert_partitions(df, "/tmp/nope", partition_by=())
-
-
 def test_compact_dataset_merges_small_files(spark, tmp_path):
     from kinesis_data_counter_spark.io import compact_dataset
 

@@ -1,44 +1,9 @@
-"""Observation-based single-pass metrics."""
+"""Single-pass data-quality metrics."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from kinesis_data_counter_spark.metrics import observed, observed_stage
-from kinesis_data_counter_spark.session import load_tables
-
-
-def test_observed_metrics_computed_in_same_pass(spark, sf_dir):
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    df, obs = observed(
-        ev,
-        "ingest",
-        n=F.count(F.lit(1)),
-        # DISTINCT aggregates are rejected in observe() — metrics must be
-        # task-mergeable; the sketch estimate is the supported form
-        n_users=F.approx_count_distinct("user_id", rsd=0.01),
-        max_value=F.max("value"),
-    )
-    out = df.groupBy("event_type").count()
-    assert out.count() > 0  # action drives both the query AND the metrics
-    got = obs.get
-    exact_users = ev.select("user_id").distinct().count()
-    assert got["n"] == ev.count()
-    assert abs(got["n_users"] - exact_users) <= max(1, 0.05 * exact_users)
-    assert got["max_value"] == ev.agg(F.max("value")).collect()[0][0]
-
-
-def test_observed_stage_funnel_selectivity(spark, sf_dir):
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    stage1, obs1 = observed_stage(ev, "clicks", F.col("event_type") == "click")
-    stage2, obs2 = observed_stage(stage1, "big", F.col("value") > 100)
-    n_final = stage2.count()
-
-    m1, m2 = obs1.get, obs2.get
-    assert m1["rows_in"] == ev.count()
-    assert m1["rows_kept"] == ev.where("event_type = 'click'").count()
-    assert m2["rows_in"] == m1["rows_kept"]
-    assert m2["rows_kept"] == n_final
 
 
 def test_profile_columns_one_pass(spark):

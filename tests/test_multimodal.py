@@ -90,14 +90,6 @@ def test_sample_frames_every_k_one_covers_all(spark):
     assert b"".join(bytes(r["frame"]) for r in frames) == b"y" * (5 * fb)
 
 
-def test_decode_stubs_raise_without_codecs(spark):
-    if not MM._HAS_PIL:
-        with pytest.raises(NotImplementedError):
-            MM.decode_image(b"\x89PNG")
-    with pytest.raises(NotImplementedError):
-        MM.decode_audio(b"RIFF")
-
-
 def test_resize_media_exact_nearest_neighbor(spark):
     # 9 bytes -> 3x3 grid; resize to 2x2 must pick src pixels (0,0) (0,1)
     # via xs=[0,1], ys=[0,1]: rows 0,1 / cols 0,1 of the 3x3 grid
@@ -224,17 +216,6 @@ def test_decode_wav_rejects_non_pcm():
         MM.decode_wav(bytes(mulaw))
     with pytest.raises(ValueError):
         MM.decode_wav(ok[:20])
-
-
-def test_decode_image_audio_route_to_struct_codecs():
-    bmp = MM.encode_bmp(b"\x05\x06", 2, 1)
-    assert MM.decode_image(bmp)[:2] == (2, 1)
-    wav = MM.encode_wav([3], 8000)
-    assert MM.decode_audio(wav)[0] == 8000
-    import pytest
-
-    with pytest.raises(NotImplementedError):
-        MM.decode_audio(b"\xffagged-not-riff-bytes")
 
 
 def test_decode_media_table_end_to_end(spark):

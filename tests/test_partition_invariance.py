@@ -238,29 +238,6 @@ def test_fuzzy_pairs_invariant_under_partitioning(spark):
     assert all(r == results[0] for r in results[1:])
 
 
-def test_bpe_encode_invariant_under_partitioning(spark):
-    # the merge table is trained ONCE (md5-ordered sample is layout-free);
-    # encoding is per-doc, so tokens must not depend on partitioning
-    from kinesis_data_counter_spark.operators.text import (
-        bpe_encode,
-        bpe_train_merges,
-    )
-
-    docs = _docs(spark, n=40)
-    merges_per_layout = [
-        bpe_train_merges(lay.drop("__part_key"), num_merges=30, sample_docs=100)
-        for lay in _layouts(docs)
-    ]
-    assert all(m == merges_per_layout[0] for m in merges_per_layout[1:])
-    results = []
-    for layout in _layouts(docs):
-        out = bpe_encode(layout.drop("__part_key"), merges_per_layout[0])
-        results.append(
-            sorted((r.doc_id, tuple(r.tokens or ()), r.n_tokens) for r in out.collect())
-        )
-    assert all(r == results[0] for r in results[1:])
-
-
 def test_boilerplate_removal_invariant_under_partitioning(spark):
     from kinesis_data_counter_spark.operators.corpus import boilerplate_removal
 

@@ -130,3 +130,26 @@ def test_bounded_collect_counts_every_column_and_nulls(spark, monkeypatch):
     assert len(bounded_collect(df)) == 2
     monkeypatch.setattr(session, "DRIVER_COLLECT_MAX_BYTES", 12)
     assert bounded_collect(df) is None
+
+
+def test_get_spark_returns_the_live_session_without_py4j_calls(spark):
+    # a second get_spark() hands back the live session as is: no builder
+    # conf crosses py4j again, and the conf the tests rely on still holds
+    from py4j.clientserver import ClientServerConnection
+
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command, *a, **k):
+        calls.append(command)
+        return send(self, command, *a, **k)
+
+    ClientServerConnection.send_command = counted
+    try:
+        again = session.get_spark()
+    finally:
+        ClientServerConnection.send_command = send
+    assert again is spark
+    assert calls == []
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"

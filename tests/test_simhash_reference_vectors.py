@@ -159,16 +159,3 @@ def test_falsifier_larger_subset_variant_misses_pigeonhole_pair():
     assert correct == {(1, 2, 3)}
     assert wrong == set()
     assert correct != wrong
-
-
-def test_blocks_for_rule_bounds():
-    from kinesis_data_counter_spark.operators.dedup import simhash_blocks_for
-
-    # minimal d+1 blocks while occupancy allows; grows with corpus
-    assert simhash_blocks_for(1_000, max_hamming=D) == D + 1
-    big = simhash_blocks_for(100_000_000, max_hamming=D)
-    assert big > D + 1
-    # table count stays combinatorially bounded
-    import math
-
-    assert math.comb(big, D) <= 64

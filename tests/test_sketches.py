@@ -192,35 +192,6 @@ def test_quantile_two_level_sharded_state_is_mergeable(spark):
         assert lo <= two[q] <= hi
 
 
-def test_quantile_partials_survive_a_storage_boundary(spark, tmp_path):
-    # the claim vs percentile_approx: the KLL state is a first-class BINARY
-    # column. Partials written to parquet by one job and merged by another
-    # must estimate within the same rank tolerance as the in-job path.
-    rng = random.Random(3)
-    n = 24_000
-    rows = [(i % 6, f"s{i % 8}", rng.uniform(0, 1000.0)) for i in range(n)]
-    df = spark.createDataFrame(rows, "g int, shard string, v double")
-    p = str(tmp_path / "kll_partials")
-    SK.quantile_partials(df, "v", group_col="g", shard_col="shard").write.parquet(p)
-    # "different job": only the parqueted states cross the boundary
-    est = {
-        (r["group"], r["q"]): r["est"]
-        for r in SK.merge_quantile_partials(
-            spark.read.parquet(p), quantiles=(0.5, 0.99)
-        ).collect()
-    }
-    per_g: dict[int, list[float]] = {}
-    for g, _, v in rows:
-        per_g.setdefault(g, []).append(v)
-    for g, vals in per_g.items():
-        vals.sort()
-        m = len(vals)
-        for q in (0.5, 0.99):
-            lo = vals[max(0, int((q - 0.04) * m) - 1)]
-            hi = vals[min(m - 1, int((q + 0.04) * m))]
-            assert lo <= est[(g, q)] <= hi, (g, q)
-
-
 # ---------------------------------------------------------------------------
 # count-min sketch (cms_partials / cms_merge / cms_point_estimates)
 # ---------------------------------------------------------------------------
@@ -296,24 +267,3 @@ def test_cms_partials_bounded_rows(spark):
     df = spark.createDataFrame(rows, "item string, shard int")
     p = SK.cms_partials(df, "item", depth=4, hex_chars=2, shard_col="shard")
     assert p.count() <= 4 * 4 * 256
-
-
-def test_topk_partials_survive_a_storage_boundary(spark, tmp_path):
-    # approx_top_k state is a first-class column (struct with a BINARY
-    # sketch): partials written by one job and combined by another give the
-    # same answer as the in-job two-level path — and in exact mode (tracked
-    # capacity >= cardinality), the same answer as a plain GROUP BY
-    rows = [(f"k{i % 9}", i % 4) for i in range(1800)] + [("hot", 0)] * 500
-    df = spark.createDataFrame(rows, "item string, shard int")
-    p = str(tmp_path / "topk_partials")
-    SK.topk_partials(df, "item", shard_col="shard").write.parquet(p)
-    got = [
-        (r["rank"], r["item"], r["cnt"])
-        for r in SK.merge_topk_partials(spark.read.parquet(p), k=3).collect()
-    ]
-    exact = {
-        r["item"]: r["n"]
-        for r in df.groupBy("item").agg(F.count("*").alias("n")).collect()
-    }
-    want = sorted(exact.items(), key=lambda kv: (-kv[1], kv[0]))[:3]
-    assert got == [(i + 1, k, n) for i, (k, n) in enumerate(want)]

@@ -18,7 +18,7 @@ def test_detect_language(spark):
         (6, ""),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r.d for r in df.select("doc_id", TX.detect_language(F.col("text")).alias("d")).collect()}
+    got = {r.doc_id: r.detected for r in TX.detect_language_bulk(df).collect()}
     assert got == {1: "en", 2: "de", 3: "es", 4: "fr", 5: "und", 6: "und"}
 
 
@@ -59,7 +59,7 @@ def test_quality_features(spark):
 
 def test_quality_features_shared_split_edges(spark):
     # pins the round-12 single-tokenization + regexp_count rewrite against
-    # the original token_count/_word_hits/regexp_replace semantics on the
+    # the original token_count/word-hit/regexp_replace semantics on the
     # edge rows where they could plausibly diverge: NULL, empty,
     # whitespace-only (trim-before-split), leading/trailing whitespace
     # (the old stopword split was untrimmed), mixed \t\n whitespace, and
@@ -245,31 +245,6 @@ def test_bpe_train_is_deterministic_and_greedy(spark):
     assert m1[0] == ("l", "o")
 
 
-def test_bpe_encode_roundtrips_and_compresses(spark):
-    rows = [
-        (0, "spark table scan spark table"),
-        (1, "table scan table scan scan"),
-        (2, None),            # NULL text → NULL tokens (NULL-parity rule)
-        (3, ""),              # empty doc → zero tokens
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    merges = TX.bpe_train_merges(docs, num_merges=50, sample_docs=10)
-    enc = {r.doc_id: r for r in TX.bpe_encode(docs, merges).collect()}
-    assert enc[2].tokens is None and enc[2].n_tokens is None
-    assert enc[3].tokens == [] and enc[3].n_tokens == 0
-    # losslessness per doc
-    for d in (0, 1):
-        text = rows[d][1]
-        decoded = "".join(enc[d].tokens).replace("</w>", " ").rstrip(" ")
-        assert decoded == " ".join(text.split())
-    # with 50 merges this tiny vocab collapses to one token per word
-    assert enc[0].n_tokens == 5
-
-    (stats,) = TX.bpe_roundtrip_stats(docs, merges).collect()
-    assert (stats.n_docs, stats.n_nonnull) == (4, 3)
-    assert stats.roundtrip_all and stats.compression_ok
-
-
 def test_bpe_falsification_controls(spark):
     docs = spark.createDataFrame(
         [(0, "alpha beta beta gamma"), (1, "alpha alpha beta")],
@@ -291,6 +266,17 @@ def test_bpe_falsification_controls(spark):
     # sanity: the same merges still roundtrip clean text
     (s_ok,) = TX.bpe_roundtrip_stats(docs, merges).collect()
     assert s_ok.roundtrip_all
+    # NULL and empty docs are counted but not decoded; with 50 merges this
+    # tiny vocab collapses to one token per word
+    edge = spark.createDataFrame(
+        [(0, "spark table scan spark table"), (1, "table scan table scan scan"),
+         (2, None), (3, "")],
+        "doc_id long, text string",
+    )
+    edge_merges = TX.bpe_train_merges(edge, num_merges=50, sample_docs=10)
+    (s_edge,) = TX.bpe_roundtrip_stats(edge, edge_merges).collect()
+    assert (s_edge.n_docs, s_edge.n_nonnull) == (4, 3)
+    assert s_edge.roundtrip_all and s_edge.compression_ok
 
 
 def test_bm25_ranking_and_edges(spark):

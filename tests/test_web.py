@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from kinesis_data_counter_spark.operators.web import (
     blocklist_filter,
     domain_cap,
-    domain_rollup,
     host_of,
     registered_domain,
 )
@@ -48,25 +47,6 @@ def test_host_and_registered_domain_messy_urls(spark):
         (None, None),
         ("localhost", "localhost"),
     ]
-
-
-def test_domain_rollup_counts_and_null_domain_row(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "https://a.example.com/1", 10),
-            (2, "https://b.example.com/2", 30),
-            (3, "https://other.org/3", 5),
-            (4, "garbage", 7),
-        ],
-        "doc_id long, url string, n long",
-    )
-    got = {
-        r["domain"]: (r["n_docs"], r["total_size"], r["avg_size"])
-        for r in domain_rollup(df, size_col="n").collect()
-    }
-    assert got["example.com"] == (2, 40, 20.0)
-    assert got["other.org"] == (1, 5, 5.0)
-    assert got[None] == (1, 7, 7.0)
 
 
 def test_blocklist_filter_drops_only_blocked_and_keeps_malformed(spark):
